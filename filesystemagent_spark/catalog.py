@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as ST
 
+from filesystemagent_spark.handles import HANDLES
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -27,7 +29,7 @@ TPCH_TABLES = (
 EXTRA_TABLES = ("events", "documents", "embeddings")
 ALL_TABLES = TPCH_TABLES + EXTRA_TABLES
 
-# Tables whose parquet timestamps are NANOS-precision (see table()).
+# Tables whose parquet timestamps are NANOS-precision (see _read_table()).
 _NANO_TS_COLS = {"events": ("ts",)}
 
 # Dimension tables small enough to broadcast at any realistic scale
@@ -36,19 +38,23 @@ _NANO_TS_COLS = {"events": ("ts",)}
 BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part"})
 
 
-# Plan-handle memo shared by every Catalog instance of one session:
-# each query call builds a fresh Catalog, and a cold `read.parquet` is
-# 2-3 py4j round trips plus a JVM analysis pass per table (measured
-# 0.1-0.5 s each) repeated for every table of every run. The memo
-# holds lazy DataFrame HANDLES only — no rows, no results: every
-# execution still scans the parquet from disk (the fixture dirs are
-# immutable per sf_dir). Keyed weakly by session so a stopped/replaced
-# session drops its entries instead of serving dead JVM references.
-from weakref import WeakKeyDictionary
-
-_HANDLES: "WeakKeyDictionary[SparkSession, dict[tuple[str, str, int], DataFrame]]" = (
-    WeakKeyDictionary()
-)
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
+    if name in _NANO_TS_COLS:
+        # Parquet TIMESTAMP(NANOS) is unreadable by Spark's native
+        # reader; ingest as int64 nanos and truncate to microsecond
+        # timestamps (integer div — these values exceed double
+        # precision). Runtime-settable, so this also works under a
+        # caller-provided session.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(path)
+        for col in _NANO_TS_COLS[name]:
+            if isinstance(df.schema[col].dataType, ST.LongType):
+                df = df.withColumn(
+                    col, F.timestamp_micros(F.expr(f"{col} div 1000"))
+                )
+    else:
+        df = spark.read.parquet(path)
+    return Catalog._normalize_ts(df)
 
 
 class Catalog:
@@ -57,43 +63,18 @@ class Catalog:
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.sf_dir = sf_dir
-        self._cache = _HANDLES.setdefault(spark, {})
         # Deterministic timestamp rendering even under a caller-provided
         # session (the driver builds its own): parquet timestamps are
         # naive, so formatting must not shift with a local timezone.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     def table(self, name: str) -> DataFrame:
+        """The table's plan handle, shared by every Catalog of the
+        session through the stamp-keyed handle memo (handles.py): each
+        query call builds a fresh Catalog, and a cold ``read.parquet``
+        costs 0.1-0.5 s of py4j round trips and JVM analysis."""
         path = os.path.join(self.sf_dir, f"{name}.parquet")
-        # Freshness guard in the key (not just (sf_dir, name)): Spark
-        # snapshots the file listing at read.parquet time, so a table
-        # file regenerated in-process would otherwise be served from a
-        # stale handle (FileNotFound or old listing). stat() is one
-        # syscall — noise next to the 0.1-0.5 s analysis pass the memo
-        # saves — and mirrors the footer-cache keying in txtable.py.
-        try:
-            mtime = os.stat(path).st_mtime_ns
-        except OSError:
-            mtime = -1
-        key = (self.sf_dir, name, mtime)
-        if key not in self._cache:
-            if name in _NANO_TS_COLS:
-                # Parquet TIMESTAMP(NANOS) is unreadable by Spark's
-                # native reader; ingest as int64 nanos and truncate to
-                # microsecond timestamps (integer div — these values
-                # exceed double precision). Runtime-settable, so this
-                # also works under a driver-provided session.
-                self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-                df = self.spark.read.parquet(path)
-                for col in _NANO_TS_COLS[name]:
-                    if isinstance(df.schema[col].dataType, ST.LongType):
-                        df = df.withColumn(
-                            col, F.timestamp_micros(F.expr(f"{col} div 1000"))
-                        )
-            else:
-                df = self.spark.read.parquet(path)
-            self._cache[key] = self._normalize_ts(df)
-        return self._cache[key]
+        return HANDLES.get(self.spark, _read_table, path, name)
 
     @staticmethod
     def _normalize_ts(df: DataFrame) -> DataFrame:

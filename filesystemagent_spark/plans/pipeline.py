@@ -23,6 +23,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from filesystemagent_spark.handles import HANDLES, file_stamp
 from filesystemagent_spark.sources import normalizers as N
 
 # tool name → (normalizer, expected filename in the dump directory)
@@ -61,18 +62,23 @@ def run_audit_pipeline(
 
     The result is a plan, not data: callers chain analyzers/rollups
     (findings_severity_rollup, rank_by_map, plans.reporting) and Spark
-    fuses the whole pipeline into one job at action time.
+    fuses the whole pipeline into one job at action time. Normalizer
+    plans come from the session's plan-handle memo (handles.py), so a
+    repeated run over unchanged dumps reuses them instead of rebuilding
+    the eight (thousands of py4j round trips); a rewritten dump gets a
+    fresh plan.
     """
     sources = DEFAULT_SOURCES if sources is None else sources
     frames: list[DataFrame] = []
     result = PipelineResult(findings=None)  # type: ignore[arg-type]
     for tool, (fn, filename) in sources.items():
         path = os.path.join(dumps_dir, filename)
-        if not os.path.exists(path):
+        stamp = file_stamp(path)
+        if stamp is None:
             result.sources_skipped.append(tool)
             continue
         try:
-            frames.append(fn(spark, path))
+            frames.append(HANDLES.get(spark, fn, path, stamp=stamp))
             result.sources_run.append(tool)
         except Exception as e:  # noqa: BLE001 — tool-level isolation
             result.sources_failed[tool] = str(e)

@@ -18,7 +18,9 @@ from contextlib import contextmanager
 
 
 @contextmanager
-def _pinned_shuffle(spark: SparkSession, n: str | None = None):
+def _pinned_shuffle(
+    spark: SparkSession, n: str | None = None, pins: dict[str, str] | None = None
+):
     """Stateful streams schedule every state partition each microbatch
     (plus timeout sweeps) and pay a state-store open/commit per
     partition; a bare session's 200 default partitions are pure task
@@ -29,7 +31,9 @@ def _pinned_shuffle(spark: SparkSession, n: str | None = None):
     sf0.1 local[32]: pin 16 → 1.40 s, pin 8 → 1.05 s best-of-3 on the
     tumbling gate) while still scaling up with real clusters.
     ``SPARK_GRAFT_STREAM_SHUFFLE`` overrides for deployments whose
-    per-batch state actually needs the parallelism."""
+    per-batch state actually needs the parallelism. Any ``pins`` are
+    set alongside it; every pinned conf gets the caller's value back
+    (unset again if it was unset) on exit."""
     if n is None:
         default = max(2, spark.sparkContext.defaultParallelism // 4)
         # Validate the override: '0'/negative/garbage would be set as
@@ -39,12 +43,18 @@ def _pinned_shuffle(spark: SparkSession, n: str | None = None):
             n = str(max(1, int(os.environ["SPARK_GRAFT_STREAM_SHUFFLE"])))
         except (KeyError, ValueError):
             n = str(default)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
+    pins = {"spark.sql.shuffle.partitions": n, **(pins or {})}
+    prev = {k: spark.conf.get(k, None) for k in pins}
+    for k, v in pins.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 # -- shared gate staging/drain machinery (round 9: factored out of the
@@ -103,12 +113,13 @@ def _drain_to_memory(
     writer = df.writeStream.format("memory").queryName(sink)
     if output_mode:
         writer = writer.outputMode(output_mode)
-    with _pinned_shuffle(spark):
-        # The outer gates' unmatched-row flush rides the engine's
-        # no-data micro-batch (see _watermark_tick_batches) — default
-        # on, pinned here so a caller session that disabled it can't
-        # silently swallow the eviction pass.
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    # The outer gates' unmatched-row flush rides the engine's no-data
+    # micro-batch (see _watermark_tick_batches) — default on, pinned
+    # here so a caller session that disabled it can't silently swallow
+    # the eviction pass.
+    with _pinned_shuffle(
+        spark, pins={"spark.sql.streaming.noDataMicroBatches.enabled": "true"}
+    ):
         q = (
             writer.option("checkpointLocation", os.path.join(ckpt_dir, "_ckpt"))
             .trigger(availableNow=True)

@@ -13,7 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults sized for the harness box (local[32], 128 GiB). On a real
+# Local parallelism follows SPARK_GRAFT_CPUS (default 32) and the JVM
+# heap SPARK_GRAFT_DRIVER_MEM (default 16g); see get_spark(). On a real
 # cluster the same code runs unchanged: master/shuffle-partitions are
 # env-overridable and AQE re-coalesces at runtime anyway.
 _DEFAULTS = {
@@ -48,6 +49,17 @@ _DEFAULTS = {
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
     "spark.ui.enabled": "false",
+    # Compiled-class LRU (Janino). The default 100 is below the working
+    # set of one pass over even a handful of registered queries, so a
+    # session that repeats them evicts and recompiles in a cycle — each
+    # recompiled class also restarts as cold, un-JIT-ed code. Sized from
+    # scripts/codegen_working_set.py (every registered query once):
+    # 3162 distinct classes at sf0.001, rounded up to the next power of
+    # two for plans that differ at other scale factors. The cache only
+    # holds classes a session actually compiled, so a session running a
+    # few queries pays nothing for the headroom. Static conf: it only
+    # applies to sessions get_spark() launches.
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
 
@@ -60,7 +72,11 @@ def tune_caller_session(spark: SparkSession) -> None:
     e.g. the driver's bare one), but pyspark gates the whole feature on
     a process-global cache that exists precisely so the check is cheap;
     pinning it False is equivalent to having built the session with the
-    conf off. Only error messages lose the Python call-site line."""
+    conf off. Only error messages lose the Python call-site line.
+
+    The codegen class-cache size in _DEFAULTS is static too, and unlike
+    the debugging gate it has no Python-side switch: a caller's live
+    session keeps the size it was launched with."""
     try:  # pragma: no cover - attribute private to pyspark
         import pyspark.errors.utils as _eu
 
@@ -132,3 +148,11 @@ def get_spark(
     # gate explicitly so every entry point gets the same behavior.
     tune_caller_session(spark)
     return spark
+
+
+def compiled_class_count(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far (one per codegen
+    cache miss) — the counter scripts/codegen_working_set.py and the
+    cache tests read."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -63,6 +63,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from filesystemagent_spark.handles import HANDLES, IMMUTABLE, file_stamp
+
 
 class CommitConflict(Exception):
     """Another writer published this version first — retry on a fresh
@@ -121,47 +123,30 @@ _FOOTER_LOCK = Lock()
 
 # App-metadata memo over IMMUTABLE manifests (written to a temp path,
 # then link(2)-ed into place — content never changes after publish;
-# expiry only deletes). Keyed by manifest path; a hit re-checks
-# existence so expired versions still drop out of stamp walks. Entries
-# are 1-tuples so "cached empty app" and "not cached" stay distinct.
-# The dicts are shared read-only — internal walkers only read scalars.
-_APP_CACHE: "OrderedDict[str, tuple]" = OrderedDict()
+# expiry only deletes). Keyed by manifest path AND its file stamp: a
+# table dropped and re-init()ed at the same path publishes new manifest
+# files under the old names, which must not serve the old app. The
+# stat that takes the stamp also re-checks existence, so expired
+# versions still drop out of stamp walks. The dicts are shared
+# read-only — internal walkers only read scalars.
+_APP_CACHE: "OrderedDict[tuple, dict]" = OrderedDict()
 _APP_CACHE_MAX = 8192
 _APP_CACHE_LOCK = Lock()
 
-# Scan-handle memo for TxTable reads (the catalog.py discipline applied
-# to snapshot scans): `read()` re-planned `spark.read.schema(ddl)
-# .parquet(*files)` on EVERY call — 2-3 py4j round trips plus a JVM
-# relation-analysis pass — and the lifecycle queries read the same
-# snapshot many times per run (probe, verify, serve). The memo holds
-# lazy plan HANDLES only (no rows, no .cache()); it is keyed by the
-# RESOLVED (schema_ddl, file tuple), so a commit changes the file set
-# and thereby the key — the next read() re-resolves the manifest and
-# misses, which IS the invalidation (content-addressed, strictly safer
-# than (path, version)). Data files are immutable once staged, so a
-# handle can never serve stale bytes. Weak-keyed by session so a
-# stopped JVM drops its handles.
-from weakref import WeakKeyDictionary
-
-_SCAN_HANDLES: "WeakKeyDictionary[SparkSession, OrderedDict]" = (
-    WeakKeyDictionary()
-)
-_SCAN_HANDLES_MAX = 512
+def _read_files(spark: SparkSession, files: tuple, schema_ddl: str) -> DataFrame:
+    return spark.read.schema(schema_ddl).parquet(*files)
 
 
 def _scan_files(spark: SparkSession, schema_ddl: str, files) -> DataFrame:
-    """Memoized `spark.read.schema(schema_ddl).parquet(*files)`."""
-    key = (schema_ddl, tuple(files))
-    cache = _SCAN_HANDLES.setdefault(spark, OrderedDict())
-    hit = cache.get(key)
-    if hit is not None:
-        cache.move_to_end(key)
-        return hit
-    df = spark.read.schema(schema_ddl).parquet(*key[1])
-    cache[key] = df
-    while len(cache) > _SCAN_HANDLES_MAX:
-        cache.popitem(last=False)
-    return df
+    """``spark.read.schema(schema_ddl).parquet(*files)`` through the
+    session's plan-handle memo (handles.py): the lifecycle queries read
+    one snapshot many times per run (probe, verify, serve). The key is
+    the RESOLVED file set, so a commit changes the key and the next
+    read() misses, which IS the invalidation (content-addressed,
+    strictly safer than (path, version)); data files are written once
+    under fresh uuid paths, so their tuple is stamped IMMUTABLE and a
+    handle can never serve stale bytes."""
+    return HANDLES.get(spark, _read_files, tuple(files), schema_ddl, stamp=IMMUTABLE)
 
 
 def _footer_stats_one(f: str) -> dict[str, list]:
@@ -1374,22 +1359,27 @@ class TxTable:
         """The app dict of `version`, or None when expired — through a
         process-global bounded memo. Manifests are IMMUTABLE once
         linked into place (the link(2) CAS), so a cached app column can
-        never go stale; expiry only DELETES files, and a hit re-checks
-        existence (one stat syscall) so an expired version drops out of
-        the walk exactly as an uncached read would."""
+        only go stale when the table is dropped and re-created at the
+        same path — which the manifest's stamp in the key catches. The
+        stat that takes the stamp (one syscall) also sees expiry, so an
+        expired version drops out of the walk exactly as an uncached
+        read would."""
         p = self._manifest_path(version)
+        stamp = file_stamp(p)
+        if stamp is None:
+            return None  # expired
+        key = (p, stamp)
         with _APP_CACHE_LOCK:
-            hit = _APP_CACHE.get(p)
+            hit = _APP_CACHE.get(key)
             if hit is not None:
-                _APP_CACHE.move_to_end(p)
-        if hit is not None:
-            return hit[0] if os.path.exists(p) else None
+                _APP_CACHE.move_to_end(key)
+                return hit
         try:
             app = self._read_manifest(version).get("app") or {}
         except FileNotFoundError:
-            return None  # expired: never cached (it cannot reappear)
+            return None  # expired between the stat and the read
         with _APP_CACHE_LOCK:
-            _APP_CACHE[p] = (app,)
+            _APP_CACHE[key] = app
             while len(_APP_CACHE) > _APP_CACHE_MAX:
                 _APP_CACHE.popitem(last=False)
         return app

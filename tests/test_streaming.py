@@ -364,3 +364,21 @@ def test_watermark_drop_accounting_is_exact(spark, tmp_path):
     # emitted = finalized noon window's singleton groups from b0 only
     emitted = spark.table("acct_sink")
     assert {r["event_id"] for r in emitted.collect()} == {1}
+
+
+def test_gate_drain_restores_callers_no_data_batch_conf(spark, sf_dir):
+    """The streaming gates pin noDataMicroBatches on while they drain;
+    a caller that turned it off gets its setting back afterwards, and
+    so does an untouched shuffle count."""
+    from filesystemagent_spark.queries import registry
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(key, "false")
+    try:
+        out = registry()["events_stream_tumbling"].fn(spark, sf_dir)
+        assert out.count() > 0
+        assert spark.conf.get(key) == "false"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle
+    finally:
+        spark.conf.unset(key)

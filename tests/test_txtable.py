@@ -3393,3 +3393,25 @@ def test_read_scan_handle_memo_and_commit_staleness(spark, tmp_path):
     assert {r["k"] for r in r2.collect()} == {1, 2, 3}
     # the old snapshot's handle still answers as-of reads consistently
     assert t.read(spark, version=1).count() == 2
+
+
+def test_app_metadata_memo_survives_drop_and_recreate(spark, tmp_path):
+    """A table dropped (rmtree) and re-init()ed at the same path writes
+    new manifests under the old names; the app-metadata memo keys on
+    the manifest's file stamp, so the re-created table's app is read,
+    not the dropped one's."""
+    import shutil
+
+    from filesystemagent_spark.sources.txtable import TxTable
+
+    path = str(tmp_path / "recreated")
+    df = spark.createDataFrame([(1, "a")], "k: bigint, s: string")
+    TxTable(path).init(df, app={"batch_id": 7})
+    assert TxTable(path).latest_app_value("batch_id") == 7  # memoized
+
+    shutil.rmtree(path)
+    TxTable(path).init(df, app={"batch_id": 8})
+    t = TxTable(path)
+    assert t.latest_version() == 1
+    assert t.latest_app_value("batch_id") == 8
+    assert t.latest_app_values(("batch_id",)) == {"batch_id": 8}
