@@ -1,38 +1,50 @@
-"""Session-scoped registry for operator-internal persisted DataFrames.
+"""Owner of operator-internal persisted DataFrames.
 
 Several operators materialize a derived sketch before a self-join
 (minhash/simhash/Hamming bands, LSH buckets, inverted indexes, oriented
 edge lists): Catalyst re-executes a self-join's upstream once per branch
 otherwise, so the persist is load-bearing for performance. But the
-DataFrames are internal to the operator — the caller never sees them, so
-the caller can't unpersist them, and repeated operator calls in one
-long-lived session would accumulate MEMORY_AND_DISK cache entries until
-executor storage evicts them under pressure.
+caller never sees these DataFrames and can't unpersist them, so
+repeated operator calls in one long-lived session would accumulate
+MEMORY_AND_DISK cache entries until executor storage evicts them.
 
-``track_persist`` is the one persist call sites use; every persisted
-intermediate lands in a registry that ``release_tracked_caches`` drains.
-Long-running hosts (the sweep and driver-sim loops, a notebook between
-pipeline stages, a scheduler between jobs) call the release hook after
-each unit of work. Eviction-on-pressure makes the leak benign for
-single-query runs, so callers that never release still work — they just
-hold warm caches, which is also what makes bench.py's min-of-3 a
-warm-cache metric (see SCALE.md).
+``track_persist`` is the one persist call sites use. It registers each
+persisted frame in a process-wide registry and in the innermost
+``tracked_scope()`` of the calling thread (a ``ContextVar``). Leaving a
+scope unpersists that scope's frames only, so a unit of work (a feed
+sink's micro-batch) drops its own intermediates while a concurrent
+query on the same session keeps its. ``release_tracked_caches()``
+drains the whole registry; hosts that run one unit of work at a time
+(a notebook between stages, ``perfbench/run.py`` and
+``scripts/driver_sim.py`` between queries) call it in between. Callers that never release still work:
+they just hold warm caches until storage pressure evicts them.
 """
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
+
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
+_LOCK = threading.Lock()  # guards every change to _TRACKED
 _TRACKED: list[DataFrame] = []
+_SCOPE: ContextVar[list[DataFrame] | None] = ContextVar("tracked_scope", default=None)
 
 
 def track_persist(
     df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
 ) -> DataFrame:
-    """``df.persist(level)``, registered for later bulk release."""
+    """``df.persist(level)``, registered for later release."""
     persisted = df.persist(level)
-    _TRACKED.append(persisted)
+    scope = _SCOPE.get()
+    with _LOCK:
+        _TRACKED.append(persisted)
+    if scope is not None:
+        scope.append(persisted)
     return persisted
 
 
@@ -40,29 +52,22 @@ def tracked_count() -> int:
     return len(_TRACKED)
 
 
-def tracked_mark() -> int:
-    """A position marker for `release_tracked_since` — scoped release
-    for long-running hosts that must drop THEIR intermediates without
-    draining a caller's (a feed sink's per-batch release is the
-    motivating case: thousands of micro-batches would otherwise
-    accumulate tracked entries for the session's lifetime)."""
-    return len(_TRACKED)
-
-
-def release_tracked_since(mark: int, blocking: bool = False) -> int:
-    """Unpersist every intermediate tracked after `mark` (from
-    `tracked_mark`). Interleaved tracking from a concurrent query can
-    hand this a stranger's entry — unpersist just costs that query a
-    recompute, never correctness."""
-    released = 0
-    while len(_TRACKED) > mark:
-        df = _TRACKED.pop()
-        try:
-            df.unpersist(blocking)
-            released += 1
-        except Exception:
-            pass
-    return released
+@contextmanager
+def tracked_scope() -> Iterator[None]:
+    """Unpersist, on exit, the frames this thread tracked inside the
+    block and outside any nested scope, unless a global release has
+    already dropped them."""
+    frames: list[DataFrame] = []
+    token = _SCOPE.set(frames)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        mine = {id(df) for df in frames}
+        with _LOCK:
+            held = [df for df in _TRACKED if id(df) in mine]
+            _TRACKED[:] = [df for df in _TRACKED if id(df) not in mine]
+        _unpersist(held, blocking=False)
 
 
 def release_tracked_caches(blocking: bool = False) -> int:
@@ -70,9 +75,15 @@ def release_tracked_caches(blocking: bool = False) -> int:
     released. Safe to call at any time: unpersist on an already-freed
     or garbage DataFrame is a no-op, and a dead session's failures are
     swallowed (the JVM-side cache died with the session)."""
+    with _LOCK:
+        held = _TRACKED[:]
+        _TRACKED.clear()
+    return _unpersist(held, blocking)
+
+
+def _unpersist(frames: list[DataFrame], blocking: bool) -> int:
     released = 0
-    while _TRACKED:
-        df = _TRACKED.pop()
+    for df in reversed(frames):  # newest first: a frame before those it reads
         try:
             df.unpersist(blocking)
             released += 1

@@ -14,9 +14,9 @@ is the path's ``(st_mtime_ns, st_size, st_ino)``. A rewritten, replaced or
 dropped-and-recreated file gets a new stamp and therefore a fresh
 handle (Spark snapshots the file listing when the handle is built, so a
 stale handle would serve the old listing or fail with FileNotFound).
-Each ``(factory, path)`` keeps one entry: inserting a new stamp drops
-the superseded one. Entries live in a bounded LRU per session; sessions
-are held weakly and a stopped session's entries are dropped, so a dead
+Entries live in a bounded :class:`StampedLRU` per session (the same LRU
+backs the TxTable footer-stats and manifest-app memos); sessions are
+held weakly and a stopped session's entries are dropped, so a dead
 JVM's references are never served.
 """
 
@@ -26,6 +26,7 @@ import os
 import threading
 from collections import OrderedDict
 from collections.abc import Callable, Hashable
+from typing import Any
 from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,12 +55,49 @@ def _stopped(spark: SparkSession) -> bool:
     return sc is not None and sc._jsc is None
 
 
+class StampedLRU:
+    """Bounded, locked LRU of ``slot -> (stamp, value)``; the one memo
+    primitive of the engine. A hit needs the slot's stored stamp, and a
+    slot keeps one entry, so storing a new stamp drops the superseded
+    one. Past ``max_entries`` the least recently used entry goes."""
+
+    def __init__(self, max_entries: int):
+        self._max = max_entries
+        self._lock = threading.Lock()
+        self._entries: OrderedDict[Hashable, tuple] = OrderedDict()
+
+    def get(self, slot: Hashable, stamp: object, build: Callable[[], Any]) -> Any:
+        """The value stored under ``slot`` with ``stamp``, else ``build()``."""
+        with self._lock:
+            hit = self._entries.get(slot)
+            if hit is not None and hit[0] == stamp:
+                self._entries.move_to_end(slot)
+                return hit[1]
+        # Build outside the lock: a build is py4j round trips or a file
+        # parse, and holding the lock would serialize every concurrent
+        # query. Two racing builds keep the first value stored.
+        value = build()
+        with self._lock:
+            hit = self._entries.get(slot)
+            if hit is None or hit[0] != stamp:
+                hit = self._entries[slot] = (stamp, value)
+            self._entries.move_to_end(slot)
+            while len(self._entries) > self._max:
+                self._entries.popitem(last=False)
+        return hit[1]
+
+    def items(self) -> list[tuple[Hashable, tuple]]:
+        """``(slot, (stamp, value))`` pairs, least recently used first."""
+        with self._lock:
+            return list(self._entries.items())
+
+
 class HandleMemo:
-    """Bounded, locked, session-weak LRU of plan handles."""
+    """Session-weak map of :class:`StampedLRU` plan-handle memos."""
 
     def __init__(self):
         self._lock = threading.Lock()
-        self._sessions: WeakKeyDictionary[SparkSession, OrderedDict] = (
+        self._sessions: WeakKeyDictionary[SparkSession, StampedLRU] = (
             WeakKeyDictionary()
         )
 
@@ -78,39 +116,20 @@ class HandleMemo:
         tuple of them)."""
         if stamp is _STAT:
             stamp = file_stamp(path)
-        slot = (factory, path, args)
-        with self._lock:
-            entries = self._entries(spark)
-            hit = entries.get(slot)
-            if hit is not None and hit[0] == stamp:
-                entries.move_to_end(slot)
-                return hit[1]
-        # Build outside the lock: a build is py4j round trips, and
-        # holding the lock would serialize every concurrent query's
-        # planning. Two racing factories keep the first handle stored.
-        df = factory(spark, path, *args)
-        with self._lock:
-            entries = self._entries(spark)
-            hit = entries.get(slot)
-            if hit is not None and hit[0] == stamp:
-                df = hit[1]
-            else:
-                entries[slot] = (stamp, df)
-            entries.move_to_end(slot)
-            while len(entries) > _MAX_ENTRIES:
-                entries.popitem(last=False)
-        return df
+        return self._memo(spark).get(
+            (factory, path, args), stamp, lambda: factory(spark, path, *args)
+        )
 
-    def _entries(self, spark: SparkSession) -> OrderedDict:
-        # caller holds self._lock
-        entries = self._sessions.get(spark)
-        if entries is None:
-            # Handles reference their session, so a weak key alone never
-            # frees a stopped session's entries; drop them explicitly.
-            for dead in [s for s in self._sessions if _stopped(s)]:
-                del self._sessions[dead]
-            entries = self._sessions[spark] = OrderedDict()
-        return entries
+    def _memo(self, spark: SparkSession) -> StampedLRU:
+        with self._lock:
+            memo = self._sessions.get(spark)
+            if memo is None:
+                # Handles reference their session, so a weak key alone
+                # never frees a stopped session's entries; drop them.
+                for dead in [s for s in self._sessions if _stopped(s)]:
+                    del self._sessions[dead]
+                memo = self._sessions[spark] = StampedLRU(_MAX_ENTRIES)
+            return memo
 
 
 # The one memo every file source of the process shares.

@@ -22,7 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from filesystemagent_spark.caching import track_persist
+from filesystemagent_spark.caching import track_persist, tracked_scope
 from filesystemagent_spark.functions import hashing as H
 from filesystemagent_spark.functions import text as T
 
@@ -423,11 +423,6 @@ def start_minhash_index_sink(
     STAMP = "minhash_batch_id"
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from filesystemagent_spark.caching import (
-            release_tracked_since,
-            tracked_mark,
-        )
-
         t = TxTable(index_table)
         applied = t.latest_app_value(STAMP)
         if applied is not None and applied >= batch_id:
@@ -435,33 +430,32 @@ def start_minhash_index_sink(
         # the signature pipeline track-persists two intermediates per
         # call; a continuous sink must release ITS OWN per batch or a
         # long-lived drain accumulates them for the session's lifetime
-        mark = tracked_mark()
-        imgs, latest, _ = _batch_images(batch_df, id_col)
-        try:
-            if latest.isEmpty():
-                return  # empty batch: idempotent no-op, unstamped
-            post = latest.filter(
-                F.col("_change_type").isin("insert", "upsert")
-            ).select(id_col, text_col)
-            new_rows = minhash_band_index(
-                post, id_col, text_col,
-                shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
-                max_bucket=None, seed=seed, base=base, band_key=band_key,
-            ).repartitionByRange(8, "band", "band_hash")
-            # a post-image doc with EMPTY shingles contributes zero
-            # rows — has_new comes from new_rows (not post), so the
-            # delete still retires an emptied doc's old slice
-            _apply_index_batch(
-                t, spark, batch_id=batch_id, stamp_key=STAMP,
-                latest=latest, id_col=id_col, new_rows=new_rows,
-                merge_keys=[id_col, "band"],
-                fold_depth=fold_depth, fold_covered_frac=fold_covered_frac,
-                maintain_every=maintain_every,
-                maintain_retention_seconds=maintain_retention_seconds,
-            )
-        finally:
-            imgs.unpersist()
-            release_tracked_since(mark)
+        with tracked_scope():
+            imgs, latest, _ = _batch_images(batch_df, id_col)
+            try:
+                if latest.isEmpty():
+                    return  # empty batch: idempotent no-op, unstamped
+                post = latest.filter(
+                    F.col("_change_type").isin("insert", "upsert")
+                ).select(id_col, text_col)
+                new_rows = minhash_band_index(
+                    post, id_col, text_col,
+                    shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
+                    max_bucket=None, seed=seed, base=base, band_key=band_key,
+                ).repartitionByRange(8, "band", "band_hash")
+                # a post-image doc with EMPTY shingles contributes zero
+                # rows — has_new comes from new_rows (not post), so the
+                # delete still retires an emptied doc's old slice
+                _apply_index_batch(
+                    t, spark, batch_id=batch_id, stamp_key=STAMP,
+                    latest=latest, id_col=id_col, new_rows=new_rows,
+                    merge_keys=[id_col, "band"],
+                    fold_depth=fold_depth, fold_covered_frac=fold_covered_frac,
+                    maintain_every=maintain_every,
+                    maintain_retention_seconds=maintain_retention_seconds,
+                )
+            finally:
+                imgs.unpersist()
 
     return _start_feed_sink(
         spark, source_table, checkpoint, apply_batch,

@@ -56,6 +56,7 @@ of the protocol are BOTH here as of round 4:
 from __future__ import annotations
 
 import bisect
+import errno
 import json
 import os
 import time
@@ -63,7 +64,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from filesystemagent_spark.handles import HANDLES, IMMUTABLE, file_stamp
+from filesystemagent_spark.handles import HANDLES, IMMUTABLE, StampedLRU, file_stamp
 
 
 class CommitConflict(Exception):
@@ -106,32 +107,15 @@ def _reject_reserved_columns(df: DataFrame) -> None:
         )
 
 
-# Footer-stats memo over IMMUTABLE staged files (data files are
-# written once under uuid dirs and never mutated — vacuum/compact only
-# delete them): the 0-row staging check and the commit's stats
-# collection both need the footer, which previously meant every staged
-# file's footer was parsed TWICE per verb (once in _write_data*, once
-# in _try_commit). Keyed by (path, size, mtime_ns) so a deleted-and-
-# recreated path can never serve stale stats; bounded LRU so a
-# long-lived maintenance loop can't grow it unboundedly.
-from collections import OrderedDict
-from threading import Lock
+# Per-file metadata memos: footer stats of staged data files (written
+# once under uuid dirs; vacuum/compact only delete them) and the app
+# dicts of manifests (link(2)-ed into place, never rewritten; expiry only
+# deletes). The file stamp is still part of the key: a path rewritten in
+# place, or a table dropped and re-created at the same path, reuses old
+# file names for new content. Values are shared, read-only objects.
+_FOOTER_MEMO = StampedLRU(4096)
+_APP_MEMO = StampedLRU(8192)
 
-_FOOTER_CACHE: "OrderedDict[tuple, dict[str, list]]" = OrderedDict()
-_FOOTER_CACHE_MAX = 4096
-_FOOTER_LOCK = Lock()
-
-# App-metadata memo over IMMUTABLE manifests (written to a temp path,
-# then link(2)-ed into place — content never changes after publish;
-# expiry only deletes). Keyed by manifest path AND its file stamp: a
-# table dropped and re-init()ed at the same path publishes new manifest
-# files under the old names, which must not serve the old app. The
-# stat that takes the stamp also re-checks existence, so expired
-# versions still drop out of stamp walks. The dicts are shared
-# read-only — internal walkers only read scalars.
-_APP_CACHE: "OrderedDict[tuple, dict]" = OrderedDict()
-_APP_CACHE_MAX = 8192
-_APP_CACHE_LOCK = Lock()
 
 def _read_files(spark: SparkSession, files: tuple, schema_ddl: str) -> DataFrame:
     return spark.read.schema(schema_ddl).parquet(*files)
@@ -161,27 +145,23 @@ def _footer_stats_one(f: str) -> dict[str, list]:
     Serializers that need to drop keys must build a new dict."""
     import pyarrow.parquet as pq
 
-    st = os.stat(f)
-    key = (f, st.st_size, st.st_mtime_ns)
-    with _FOOTER_LOCK:
-        hit = _FOOTER_CACHE.get(key)
-        if hit is not None:
-            _FOOTER_CACHE.move_to_end(key)
-            return hit
-    md = pq.ParquetFile(f).metadata
-    per = _stats_from_metadata(md)
-    # File size / row count as pseudo-columns (real columns can't be
-    # named this; predicates never probe them): segment envelopes then
-    # carry [min_bytes, max_bytes] so bin-packed compaction can prove
-    # an all-large segment skippable, and row_count() answers COUNT(*)
-    # from footer metadata without touching data.
-    per["__bytes__"] = [st.st_size] * 2
-    per["__rows__"] = [md.num_rows] * 2
-    with _FOOTER_LOCK:
-        _FOOTER_CACHE[key] = per
-        while len(_FOOTER_CACHE) > _FOOTER_CACHE_MAX:
-            _FOOTER_CACHE.popitem(last=False)
-    return per
+    stamp = file_stamp(f)
+    if stamp is None:
+        raise FileNotFoundError(errno.ENOENT, os.strerror(errno.ENOENT), f)
+
+    def parse() -> dict[str, list]:
+        md = pq.ParquetFile(f).metadata
+        per = _stats_from_metadata(md)
+        # File size / row count as pseudo-columns (real columns can't be
+        # named this; predicates never probe them): segment envelopes then
+        # carry [min_bytes, max_bytes] so bin-packed compaction can prove
+        # an all-large segment skippable, and row_count() answers COUNT(*)
+        # from footer metadata without touching data.
+        per["__bytes__"] = [stamp[1]] * 2  # st_size
+        per["__rows__"] = [md.num_rows] * 2
+        return per
+
+    return _FOOTER_MEMO.get(f, stamp, parse)
 
 
 def _collect_file_stats(files: list[str]) -> dict[str, dict[str, list]]:
@@ -1356,33 +1336,20 @@ class TxTable:
         return out
 
     def _app_of(self, version: int):
-        """The app dict of `version`, or None when expired — through a
-        process-global bounded memo. Manifests are IMMUTABLE once
-        linked into place (the link(2) CAS), so a cached app column can
-        only go stale when the table is dropped and re-created at the
-        same path — which the manifest's stamp in the key catches. The
-        stat that takes the stamp (one syscall) also sees expiry, so an
-        expired version drops out of the walk exactly as an uncached
-        read would."""
+        """The app dict of `version`, or None when expired, through
+        ``_APP_MEMO``. The stat that takes the stamp (one syscall) also
+        sees expiry, so an expired version drops out of the walk exactly
+        as an uncached read would."""
         p = self._manifest_path(version)
         stamp = file_stamp(p)
         if stamp is None:
             return None  # expired
-        key = (p, stamp)
-        with _APP_CACHE_LOCK:
-            hit = _APP_CACHE.get(key)
-            if hit is not None:
-                _APP_CACHE.move_to_end(key)
-                return hit
         try:
-            app = self._read_manifest(version).get("app") or {}
+            return _APP_MEMO.get(
+                p, stamp, lambda: self._read_manifest(version).get("app") or {}
+            )
         except FileNotFoundError:
             return None  # expired between the stat and the read
-        with _APP_CACHE_LOCK:
-            _APP_CACHE[key] = app
-            while len(_APP_CACHE) > _APP_CACHE_MAX:
-                _APP_CACHE.popitem(last=False)
-        return app
 
     def _try_commit(
         self, version: int, files: list[str], schema_ddl: str,

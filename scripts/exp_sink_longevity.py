@@ -1,7 +1,7 @@
 """Long-horizon version accretion in the maintenance sinks (round 10,
 verdict item 6).
 
-The growth-curve experiment (exp_incremental_scaling.py) ran 6 batches
+An earlier growth-curve experiment ran 6 batches
 per config — enough to show per-batch cost is O(batch) in TABLE size,
 but a production maintenance loop runs THOUSANDS of micro-batches, and
 every micro-batch is 1–3 TxTable commits: manifest chains grow,

@@ -3288,11 +3288,12 @@ def test_footer_stats_memo_matches_fresh_parse_and_tracks_rewrites(spark, tmp_pa
     (the 0-row staging check and the commit's stats collection used to
     parse every footer twice). The memo must (a) return exactly what a
     fresh parse returns, and (b) never serve stale stats after a path
-    is rewritten with different content (keyed on size+mtime)."""
+    is rewritten with different content (keyed on the file stamp)."""
     import pyarrow.parquet as pq
 
+    from filesystemagent_spark.handles import file_stamp
     from filesystemagent_spark.sources.txtable import (
-        _FOOTER_CACHE,
+        _FOOTER_MEMO,
         _collect_file_stats,
         _footer_stats_one,
         _stats_from_metadata,
@@ -3327,7 +3328,10 @@ def test_footer_stats_memo_matches_fresh_parse_and_tracks_rewrites(spark, tmp_pa
     got2 = _footer_stats_one(f)
     assert got2["__rows__"] == [3, 3]
     assert got2["k"] == [100, 300]
-    assert any(key[0] == f for key in _FOOTER_CACHE)
+    # one entry for f, under the rewritten file's stamp: the superseded one is gone
+    assert [(slot, st) for slot, (st, _) in _FOOTER_MEMO.items() if slot == f] == [
+        (f, file_stamp(f))
+    ]
 
 
 def test_latest_app_values_one_walk_matches_per_key_and_skips_expired(
