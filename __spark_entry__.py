@@ -28,10 +28,11 @@ def entry(spark: SparkSession) -> DataFrame:
     from filesystemagent_spark.session import tune_caller_session
 
     # The driver hands us a bare session; entry() runs before any other
-    # query, so this is the one place the per-process overhead knobs
-    # (DataFrame-debugging call-site capture — 3-4 py4j round trips per
-    # DataFrame op, cached process-globally on first use) can still be
-    # switched off for the whole verify loop.
+    # query, so this is the one place to set the confs results depend on
+    # (UTC timezone, nanosAsLong; no query sets them) and to switch off
+    # the per-process overhead knobs (DataFrame-debugging call-site
+    # capture — 3-4 py4j round trips per DataFrame op, cached
+    # process-globally on first use) for the whole verify loop.
     tune_caller_session(spark)
     return regional_revenue(spark, "/root/testdata/sf0.001")
 

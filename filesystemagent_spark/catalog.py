@@ -41,11 +41,9 @@ BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part"})
 def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     if name in _NANO_TS_COLS:
         # Parquet TIMESTAMP(NANOS) is unreadable by Spark's native
-        # reader; ingest as int64 nanos and truncate to microsecond
-        # timestamps (integer div — these values exceed double
-        # precision). Runtime-settable, so this also works under a
-        # caller-provided session.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # reader; it ingests as int64 nanos (nanosAsLong, set by
+        # session.py) and is truncated to microsecond timestamps
+        # (integer div — these values exceed double precision).
         df = spark.read.parquet(path)
         for col in _NANO_TS_COLS[name]:
             if isinstance(df.schema[col].dataType, ST.LongType):
@@ -63,10 +61,6 @@ class Catalog:
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.sf_dir = sf_dir
-        # Deterministic timestamp rendering even under a caller-provided
-        # session (the driver builds its own): parquet timestamps are
-        # naive, so formatting must not shift with a local timezone.
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     def table(self, name: str) -> DataFrame:
         """The table's plan handle, shared by every Catalog of the
@@ -81,7 +75,7 @@ class Catalog:
         """Pin every timestamp-like column to TIMESTAMP_NTZ. Pandas-
         written parquet (isAdjustedToUTC=false) reads as NTZ under
         Spark 4 defaults but as LTZ when `inferTimestampNTZ` is off —
-        the cast (identity under the UTC session tz set above) makes
+        the cast (identity under the UTC session tz session.py sets) makes
         query semantics and output schemas independent of the reader
         config of whatever session the driver hands us. DATE columns
         are widened the same way: the driver regenerates testdata

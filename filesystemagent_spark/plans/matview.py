@@ -118,16 +118,9 @@ class MaterializedRollup:
             present = {
                 r[0] for r in partials.select(self.PART_COL).distinct().collect()
             }
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                partials.write.mode("overwrite").partitionBy(
-                    self.PART_COL
-                ).parquet(self.mv_dir)
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            partials.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy(self.PART_COL).parquet(self.mv_dir)
         finally:
             partials.unpersist()
         # Days requested but producing zero partials: dynamic overwrite

@@ -13,49 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filesystemagent_spark.queries import register
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def _pinned_shuffle(
-    spark: SparkSession, n: str | None = None, pins: dict[str, str] | None = None
-):
-    """Stateful streams schedule every state partition each microbatch
-    (plus timeout sweeps) and pay a state-store open/commit per
-    partition; a bare session's 200 default partitions are pure task
-    overhead at gate scale, and the count is frozen into the first
-    checkpoint. Pin it just while the gate query starts, sized from
-    the cluster rather than a constant: cores/4 keeps wide machines
-    from re-introducing the per-partition fixed cost (measured at
-    sf0.1 local[32]: pin 16 → 1.40 s, pin 8 → 1.05 s best-of-3 on the
-    tumbling gate) while still scaling up with real clusters.
-    ``SPARK_GRAFT_STREAM_SHUFFLE`` overrides for deployments whose
-    per-batch state actually needs the parallelism. Any ``pins`` are
-    set alongside it; every pinned conf gets the caller's value back
-    (unset again if it was unset) on exit."""
-    if n is None:
-        default = max(2, spark.sparkContext.defaultParallelism // 4)
-        # Validate the override: '0'/negative/garbage would be set as
-        # spark.sql.shuffle.partitions verbatim and fail obscurely (or
-        # degenerate) only once the gate query starts.
-        try:
-            n = str(max(1, int(os.environ["SPARK_GRAFT_STREAM_SHUFFLE"])))
-        except (KeyError, ValueError):
-            n = str(default)
-    pins = {"spark.sql.shuffle.partitions": n, **(pins or {})}
-    prev = {k: spark.conf.get(k, None) for k in pins}
-    for k, v in pins.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
+from filesystemagent_spark.session import stream_session
 
 # -- shared gate staging/drain machinery (round 9: factored out of the
 # -- eight gates, which each hand-rolled these ~50 lines) --------------
@@ -97,36 +55,32 @@ def _stage_ordered_batches(stage: str, batches) -> str:
 
 
 def _drain_to_memory(
-    spark: SparkSession,
+    gs: SparkSession,
     df: DataFrame,
     ckpt_dir: str,
     *,
     output_mode: str | None = None,
     sink_prefix: str = "gate_sink",
 ):
-    """Drain a streaming DataFrame into a memory sink with availableNow
-    under a pinned shuffle count; returns (sink table, finished query —
-    the query object carries recentProgress for metrics-reading gates).
-    One definition so no gate can drift on the checkpoint/trigger/drain
-    recipe or forget the shuffle pin (frozen into the checkpoint)."""
+    """Drain a streaming DataFrame built on ``gs`` (the caller's
+    ``stream_session``) into a memory sink with availableNow; returns
+    (sink rows, finished query — the query object carries
+    recentProgress for metrics-reading gates). One definition so no
+    gate can drift on the checkpoint/trigger/drain recipe. The sink's
+    view is dropped once read: the returned frame holds the rows."""
     sink = f"{sink_prefix}_{uuid.uuid4().hex[:8]}"
     writer = df.writeStream.format("memory").queryName(sink)
     if output_mode:
         writer = writer.outputMode(output_mode)
-    # The outer gates' unmatched-row flush rides the engine's no-data
-    # micro-batch (see _watermark_tick_batches) — default on, pinned
-    # here so a caller session that disabled it can't silently swallow
-    # the eviction pass.
-    with _pinned_shuffle(
-        spark, pins={"spark.sql.streaming.noDataMicroBatches.enabled": "true"}
-    ):
-        q = (
-            writer.option("checkpointLocation", os.path.join(ckpt_dir, "_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink), q
+    q = (
+        writer.option("checkpointLocation", os.path.join(ckpt_dir, "_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    table = gs.table(sink)
+    gs.catalog.dropTempView(sink)
+    return table, q
 
 
 def _watermark_tick_batches(spark: SparkSession, ev: DataFrame) -> list:
@@ -140,8 +94,8 @@ def _watermark_tick_batches(spark: SparkSession, ev: DataFrame) -> list:
     watermark advances, and Structured Streaming schedules exactly
     that batch itself when the watermark moved —
     spark.sql.streaming.noDataMicroBatches, pinned on by
-    `_drain_to_memory`). Round 11: a second staged tick batch used to
-    play that role — one full extra state schedule (every state
+    `session.stream_session`). Round 11: a second staged tick batch
+    used to play that role — one full extra state schedule (every state
     partition × all four join state stores) plus a staging write job
     per gate, for rows the id-sign filter dropped anyway; results
     verified bit-identical with it gone (scripts/exp_interval_gate.py
@@ -183,9 +137,10 @@ def events_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from filesystemagent_spark.streaming.events import read_events_stream, windowed_counts
 
     stage = _stage_symlink(sf_dir, "events_stream_")
+    gs = stream_session(spark)
     table, _ = _drain_to_memory(
-        spark,
-        windowed_counts(read_events_stream(spark, stage), window="1 hour"),
+        gs,
+        windowed_counts(read_events_stream(gs, stage), window="1 hour"),
         stage,
         output_mode="complete",
         sink_prefix="events_stream_sink",
@@ -251,11 +206,12 @@ def events_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from filesystemagent_spark.streaming.events import read_events_stream
 
     stage = _stage_symlink(sf_dir, "events_sessions_")
+    gs = stream_session(spark)
     sessions = sessionize_stream(
-        read_events_stream(spark, stage), gap_seconds=1800, watermark="0 seconds"
+        read_events_stream(gs, stage), gap_seconds=1800, watermark="0 seconds"
     )
     table, _ = _drain_to_memory(
-        spark, sessions, stage,
+        gs, sessions, stage,
         output_mode="append", sink_prefix="events_sessions_sink",
     )
     return (
@@ -295,9 +251,10 @@ def events_stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     from filesystemagent_spark.streaming.events import read_events_stream
 
     stage = _stage_symlink(sf_dir, "events_dedup_")
+    gs = stream_session(spark)
     table, _ = _drain_to_memory(
-        spark,
-        dedup_stream(read_events_stream(spark, stage), ["user_id", "event_type"])
+        gs,
+        dedup_stream(read_events_stream(gs, stage), ["user_id", "event_type"])
         .select("user_id", "event_type"),
         stage,
         sink_prefix="events_dedup_sink",
@@ -321,14 +278,15 @@ def _interval_join_drain(
     from filesystemagent_spark.streaming.events import read_events_stream
     from filesystemagent_spark.streaming.joins import stream_interval_join
 
+    gs = stream_session(spark)
     stream = read_events_stream(
-        spark, src_dir, max_files_per_trigger=max_files_per_trigger
+        gs, src_dir, max_files_per_trigger=max_files_per_trigger
     )
     left = stream.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts")
     )
     right = read_events_stream(
-        spark, src_dir, max_files_per_trigger=max_files_per_trigger
+        gs, src_dir, max_files_per_trigger=max_files_per_trigger
     ).filter(F.col("event_type") == "view").select(
         F.col("user_id").alias("user_id"),
         F.col("event_id").alias("v_id"),
@@ -339,7 +297,7 @@ def _interval_join_drain(
         max_gap_seconds=1800, watermark="1 hour", how=how,
     )
     table, _ = _drain_to_memory(
-        spark, joined, stage, output_mode="append", sink_prefix="events_sjoin"
+        gs, joined, stage, output_mode="append", sink_prefix="events_sjoin"
     )
     return table
 
@@ -417,7 +375,9 @@ def events_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFr
     # Re-stage as 4 files so availableNow+maxFilesPerTrigger=1 yields
     # four genuine micro-batches (the harness table is a single file).
     Catalog(spark, sf_dir).events.repartition(4).write.parquet(src_dir)
-    stream = read_events_stream(spark, src_dir, max_files_per_trigger=1)
+    stream = read_events_stream(
+        stream_session(spark), src_dir, max_files_per_trigger=1
+    )
     agg = stream.groupBy(
         F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias(
             "window_start"
@@ -425,14 +385,13 @@ def events_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFr
         "event_type",
     ).agg(F.count("*").alias("n_events"))
     sink_dir = os.path.join(stage, "rollup")
-    with _pinned_shuffle(spark):
-        q = start_idempotent_file_sink(
-            agg,
-            sink_dir,
-            os.path.join(stage, "_ckpt"),
-            output_mode="update",
-        )
-        q.awaitTermination()
+    q = start_idempotent_file_sink(
+        agg,
+        sink_dir,
+        os.path.join(stage, "_ckpt"),
+        output_mode="update",
+    )
+    q.awaitTermination()
     return read_upserted(spark, sink_dir, ["window_start", "event_type"]).orderBy(
         "window_start", "event_type"
     )
@@ -522,7 +481,8 @@ def events_stream_late_accounting(spark: SparkSession, sf_dir: str) -> DataFrame
     src = _stage_ordered_batches(stage, batches)
     from filesystemagent_spark.streaming.events import read_events_stream
 
-    stream = read_events_stream(spark, src, max_files_per_trigger=1)
+    gs = stream_session(spark)
+    stream = read_events_stream(gs, src, max_files_per_trigger=1)
     # SINGLETON KEYS: numRowsDroppedByWatermark counts dropped
     # aggregation KEYS (post-partial-agg rows), not raw inputs —
     # grouping on (window, event_id) makes every raw event its own
@@ -535,7 +495,7 @@ def events_stream_late_accounting(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.count("*").alias("n"))
     )
     table, q = _drain_to_memory(
-        spark, agg, stage,
+        gs, agg, stage,
         output_mode="append", sink_prefix="events_late_sink",
     )
     dropped = 0

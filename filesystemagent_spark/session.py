@@ -1,28 +1,40 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with scale-oriented defaults, and the one owner
+of session confs.
 
 The reference engine hand-tunes thread pools and batch sizes
 (/root/reference/config.yaml:8-10, src/agent.py:29-32); in Spark the
 equivalent knobs are shuffle partitioning, AQE, and Arrow batching —
 set once here so every entry point (tests, bench, driver contract)
 gets the same execution profile.
+
+No other module sets a session conf; these are the only entry points:
+``get_spark`` launches a session with ``_DEFAULTS``;
+``tune_caller_session`` sets ``_RUNTIME_CONFS`` once on a session the
+caller built (``get_spark`` and the driver's ``entry()`` call it);
+``stream_session`` gives the streaming gates a child session with its
+own SQLConf. A setting for one write is a writer option instead.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from weakref import WeakKeyDictionary
 
 from pyspark.sql import SparkSession
 
-# Local parallelism follows SPARK_GRAFT_CPUS (default 32) and the JVM
-# heap SPARK_GRAFT_DRIVER_MEM (default 16g); see get_spark(). On a real
-# cluster the same code runs unchanged: master/shuffle-partitions are
-# env-overridable and AQE re-coalesces at runtime anyway.
-_DEFAULTS = {
-    # Runtime re-planning: partition coalescing, skew-join splitting,
-    # dynamic broadcast — the engine's answer to data skew at 100 TB.
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
+# Runtime-settable confs that results depend on: set at launch, by
+# tune_caller_session and on stream_session children, never per query.
+_RUNTIME_CONFS = {
+    # Deterministic timestamp semantics for oracle parity: parquet
+    # timestamps are naive, so casts and formatting must not shift
+    # with a local timezone.
+    "spark.sql.session.timeZone": "UTC",
+    # Parquet TIMESTAMP(NANOS) is unreadable by Spark's native reader;
+    # with this on it reads as int64 nanos, which catalog._read_table
+    # and streaming.events.read_events_stream truncate to microsecond
+    # timestamps.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Let AQE re-plan shuffles UNDER cached plans too (off by default):
     # the maintenance sinks and the LSH/graph operators persist small
     # derived intermediates (guide §5), and with this off every shuffle
@@ -31,12 +43,23 @@ _DEFAULTS = {
     # 200-partition session: drains 37 s/60 s → 12 s/8 s, tuner 32 s →
     # 16 s with coalescing allowed. Values are partitioning-invariant.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+}
+
+# Local parallelism follows SPARK_GRAFT_CPUS (default 32) and the JVM
+# heap SPARK_GRAFT_DRIVER_MEM (default 16g); see get_spark(). On a real
+# cluster the same code runs unchanged: master/shuffle-partitions are
+# env-overridable and AQE re-coalesces at runtime anyway.
+_DEFAULTS = {
+    **_RUNTIME_CONFS,
+    # Runtime re-planning: partition coalescing, skew-join splitting,
+    # dynamic broadcast — the engine's answer to data skew at 100 TB.
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for any pandas-UDF surface (transform shim, perceptual
     # hashes): batch columnar transfer, not per-row pickling.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
-    # Deterministic timestamp semantics for oracle parity.
-    "spark.sql.session.timeZone": "UTC",
     # DataFrame-debugging call-site capture costs 3-4 extra py4j round
     # trips per DataFrame method (origin getattr + conf.get + set +
     # clear) — measured 1652 → 682 py4j sends and 11.5 s → 2.1 s plan
@@ -64,8 +87,9 @@ _DEFAULTS = {
 
 
 def tune_caller_session(spark: SparkSession) -> None:
-    """Disable pyspark's DataFrame-debugging call-site capture for this
-    process — 3-4 extra py4j round trips per DataFrame method
+    """Set ``_RUNTIME_CONFS`` on ``spark``, once, so that no query sets
+    a conf; and disable pyspark's DataFrame-debugging call-site capture
+    for this process — 3-4 extra py4j round trips per DataFrame method
     (origin getattr + conf.get + set + clear), measured 1652 → 682
     sends / 11.5 s → 2.1 s constructing the incremental-dedup plan.
     The conf is STATIC (can't be set on a caller-provided live session,
@@ -77,39 +101,62 @@ def tune_caller_session(spark: SparkSession) -> None:
     The codegen class-cache size in _DEFAULTS is static too, and unlike
     the debugging gate it has no Python-side switch: a caller's live
     session keeps the size it was launched with."""
-    try:  # pragma: no cover - attribute private to pyspark
-        import pyspark.errors.utils as _eu
+    # Respect a caller that explicitly enabled the debugging conf.
+    # `_enable_debugging_cache` is private to pyspark (present and
+    # load-bearing in pyspark 4.1.2).
+    import pyspark.errors.utils as _eu
 
-        # Respect a caller that explicitly ENABLED the debugging conf on
-        # its session — only pin the gate off when the conf is unset or
-        # false. `_enable_debugging_cache` is private to pyspark
-        # (verified present and load-bearing in pyspark 4.1.2; a rename
-        # just means this optimization silently stops applying, which the
-        # except below already tolerates).
-        try:
-            explicit_on = (
-                spark.conf.get(
-                    "spark.python.sql.dataFrameDebugging.enabled", "false"
-                ).lower()
-                == "true"
-            )
-        except Exception:
-            explicit_on = False
-        if not explicit_on and getattr(
-            _eu, "_enable_debugging_cache", None
-        ) is not False:
-            _eu._enable_debugging_cache = False
-    except Exception:
-        pass
-    try:
-        # Runtime-settable (unlike the debugging conf): AQE coalescing
-        # under cached plans — see _DEFAULTS for the measured effect.
-        spark.conf.set(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        )
-    except Exception:  # pragma: no cover - older Spark without the conf
-        pass
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    if spark.conf.get(key, "false").lower() != "true":
+        _eu._enable_debugging_cache = False
+    for key, value in _RUNTIME_CONFS.items():
+        spark.conf.set(key, value)
+
+
+_STREAM_LOCK = threading.Lock()
+_STREAM_SESSIONS: WeakKeyDictionary = WeakKeyDictionary()  # caller -> child
+
+
+def stream_session(spark: SparkSession) -> SparkSession:
+    """The child session the streaming gates start their streams on:
+    one ``spark.newSession()`` per caller session, which shares the
+    SparkContext and the cache but has its own SQLConf and temp views,
+    so two threads can run gates on one session and neither session's
+    confs change. The child gets ``_RUNTIME_CONFS`` plus two stream
+    confs:
+
+    - ``spark.sql.shuffle.partitions`` = cores/4: a stateful stream
+      schedules every state partition each micro-batch and pays a
+      state-store open/commit per partition, so a bare session's 200
+      are pure overhead at gate scale, and the count is frozen into
+      the first checkpoint (measured at sf0.1 local[32] on the
+      tumbling gate: 16 → 1.40 s, 8 → 1.05 s best-of-3).
+    - ``noDataMicroBatches.enabled``: the outer interval-join gates
+      flush unmatched rows in the engine's no-data micro-batch.
+
+    One child per caller session, not per call: each session that
+    starts a stream adds a listener bus to the SparkContext for the
+    context's lifetime. Stream listeners are per session, so the
+    caller's are mirrored onto the child on every call and still see
+    the gates' progress."""
+    with _STREAM_LOCK:
+        child = _STREAM_SESSIONS.get(spark)
+        if child is None:
+            child = _STREAM_SESSIONS[spark] = spark.newSession()
+            cores = spark.sparkContext.defaultParallelism
+            for key, value in {
+                **_RUNTIME_CONFS,
+                "spark.sql.shuffle.partitions": str(max(2, cores // 4)),
+                "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+            }.items():
+                child.conf.set(key, value)
+        caller, own = (s._jsparkSession.streams() for s in (spark, child))
+        want, have = set(caller.listListeners()), set(own.listListeners())
+        for listener in want - have:
+            own.addListener(listener)
+        for listener in have - want:
+            own.removeListener(listener)
+    return child
 
 
 def get_spark(

@@ -70,10 +70,8 @@ def read_events_stream(
     the legacy conf), TIMESTAMP(MICROS) naive (reads as NTZ), and
     Spark-written TIMESTAMP_LTZ. ts is normalized to TIMESTAMP
     (UTC-pinned) so downstream watermarks/windows/state timeouts see
-    one type."""
-    # Deterministic naive<->epoch conversion for the normalizing casts.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    one type. The session's UTC timezone and nanosAsLong come from
+    ``session._RUNTIME_CONFS``."""
     try:
         sniffed = spark.read.parquet(path).schema
     except Exception:
@@ -99,7 +97,7 @@ def read_events_stream(
     ts_type = sniffed["ts"].dataType
     if isinstance(ts_type, T.LongType):  # nanos-as-long generation
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:  # NTZ or LTZ — identity values under the UTC session tz
+    else:  # NTZ or LTZ — identity values under session.py's UTC tz
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 

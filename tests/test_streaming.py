@@ -367,9 +367,10 @@ def test_watermark_drop_accounting_is_exact(spark, tmp_path):
 
 
 def test_gate_drain_restores_callers_no_data_batch_conf(spark, sf_dir):
-    """The streaming gates pin noDataMicroBatches on while they drain;
-    a caller that turned it off gets its setting back afterwards, and
-    so does an untouched shuffle count."""
+    """The streaming gates start their streams in session.stream_session's
+    child session, which has noDataMicroBatches on and its own shuffle
+    count; a caller that turned noDataMicroBatches off keeps its
+    setting, and so does an untouched shuffle count."""
     from filesystemagent_spark.queries import registry
 
     key = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -382,3 +383,145 @@ def test_gate_drain_restores_callers_no_data_batch_conf(spark, sf_dir):
         assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle
     finally:
         spark.conf.unset(key)
+
+
+def test_gate_starts_its_stream_outside_the_callers_session(
+    spark, sf_dir, monkeypatch
+):
+    """A caller's shuffle count no pin can produce is still in place
+    when the gate's stream starts, and the state operator runs with
+    stream_session's cores/4 count instead."""
+    import json
+
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from filesystemagent_spark.queries import registry
+
+    key = "spark.sql.shuffle.partitions"
+    seen, started = [], []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        seen.append(spark.conf.get(key))
+        started.append(start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        registry()["events_stream_late_accounting"].fn(spark, sf_dir).collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert seen == ["7"]
+    p = started[0].recentProgress[0]
+    p = p if isinstance(p, dict) else json.loads(p.json)
+    assert p["stateOperators"][0]["numShufflePartitions"] == max(
+        2, spark.sparkContext.defaultParallelism // 4
+    )
+
+
+def test_two_gates_on_two_threads_leave_the_session_as_it_was(
+    spark, sf_dir, duck
+):
+    """Two streaming gates run at once on one session: both match their
+    oracle, no conf of the session changes and no sink view is left in
+    its catalog (or in the child session the streams ran in)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from filesystemagent_spark.queries import registry
+    from filesystemagent_spark.session import stream_session
+    from tests.oracle_utils import compare
+
+    reg = registry()
+    names = ["events_stream_tumbling", "events_stream_sessions"]
+    conf = spark.conf.getAll
+    views = {t.name for t in spark.catalog.listTables()}
+    with ThreadPoolExecutor(2) as pool:
+        frames = list(pool.map(lambda n: reg[n].fn(spark, sf_dir), names))
+    for name, df in zip(names, frames):
+        ok, msg, n = compare(df, duck.sql(reg[name].oracle))
+        assert ok and n > 0, f"{name}: {msg}"
+    assert spark.conf.getAll == conf
+    assert {t.name for t in spark.catalog.listTables()} == views
+    child = stream_session(spark)
+    assert not [t for t in child.catalog.listTables() if "_sink_" in t.name]
+
+
+def test_nanos_timestamps_read_truncated_to_micros(spark, tmp_path):
+    """TIMESTAMP(NANOS) parquet reads through the session's nanosAsLong
+    conf, in the catalog and in the gates' stream session alike, and
+    comes back truncated to microseconds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from filesystemagent_spark.queries.streaming_gate import _drain_to_memory
+    from filesystemagent_spark.session import stream_session
+
+    ns = [1_700_000_000_123_456_789, 1_700_003_600_000_000_999]
+    table = pa.table(
+        {
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns")),
+            "user_id": pa.array([1, 1], pa.int64()),
+            "event_type": ["view", "purchase"],
+            "value": [1.0, 2.0],
+            "props": ["", ""],
+        }
+    )
+    sf = tmp_path / "sfnanos"
+    sf.mkdir()
+    pq.write_table(table, str(sf / "events.parquet"))
+    assert pq.read_schema(str(sf / "events.parquet")).field("ts").type.unit == "ns"
+    want = ["2023-11-14 22:13:20.123456", "2023-11-14 23:13:20.000000"]
+
+    def rendered(df):
+        return sorted(
+            r[0]
+            for r in df.select(
+                F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+            ).collect()
+        )
+
+    assert rendered(Catalog(spark, str(sf)).events) == want
+    gs = stream_session(spark)
+    drained, _ = _drain_to_memory(
+        gs, S.read_events_stream(gs, str(sf)), str(tmp_path)
+    )
+    assert rendered(drained) == want
+
+
+def test_callers_stream_listener_sees_gate_progress(spark, sf_dir):
+    """The gates' streams run in a child session; a listener added to
+    the caller's session still receives their events."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from filesystemagent_spark.queries import registry
+
+    got = []
+
+    class Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            got.append("started")
+
+        def onQueryProgress(self, event):
+            got.append("progress")
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            got.append("terminated")
+
+    listener = Listener()
+    spark.streams.addListener(listener)
+    try:
+        registry()["events_stream_tumbling"].fn(spark, sf_dir).collect()
+        deadline = time.time() + 30
+        while "terminated" not in got and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    assert {"started", "progress", "terminated"} <= set(got)
