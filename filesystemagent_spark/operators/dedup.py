@@ -17,9 +17,11 @@ moderate skew automatically.
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from filesystemagent_spark.caching import track_persist, tracked_scope
@@ -79,6 +81,143 @@ def _shingled_docs(
     ).filter(F.size("_shingles") > 0)
 
 
+def _bucket_pairs(
+    rows: DataFrame,
+    keys: Sequence[str],
+    *,
+    id_col: str = "_id",
+    names: tuple[str, str] = ("id_a", "id_b"),
+    extra: Sequence[Column] = (),
+) -> DataFrame:
+    """Candidate pairs from a bucket self-join: every two rows of
+    `rows` that agree on all `keys`, as (names[0], names[1]) = (lower
+    id, higher id) plus `extra` columns, which read either side as
+    ``l.<col>`` / ``r.<col>``. A pair comes out once per bucket it
+    shares, so callers take ``.distinct()`` or count the repeats. The
+    one candidate-generation stage of every banded near-duplicate
+    operator: LSH bands, pigeonhole blocks, shingle posting lists,
+    deletion variants and sign-LSH buckets differ only in their keys."""
+    cond = reduce(
+        operator.and_,
+        [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+        + [F.col(f"l.{id_col}") < F.col(f"r.{id_col}")],
+    )
+    return (
+        rows.alias("l")
+        .join(rows.alias("r"), cond)
+        .select(
+            F.col(f"l.{id_col}").alias(names[0]),
+            F.col(f"r.{id_col}").alias(names[1]),
+            *extra,
+        )
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame,
+    docs_a: DataFrame,
+    docs_b: DataFrame,
+    *,
+    names: tuple[str, str] = ("id_a", "id_b"),
+    threshold: float,
+    round_to: int | None,
+) -> DataFrame:
+    """Exact Jaccard over distinct shingle sets for candidate pairs
+    (names[0], names[1]); each id column joins its side's
+    `_shingled_docs` rows. Keeps pairs with jaccard >= threshold,
+    compared after the optional ``round_to`` rounding so two engines
+    with identical double arithmetic agree at the boundary."""
+    a = docs_a.select(F.col("_id").alias(names[0]), F.col("_shingles").alias("sh_a"))
+    b = docs_b.select(F.col("_id").alias(names[1]), F.col("_shingles").alias("sh_b"))
+    jac = F.col("_inter").cast("double") / (
+        F.size("sh_a") + F.size("sh_b") - F.col("_inter")
+    ).cast("double")
+    if round_to is not None:
+        jac = F.round(jac, round_to)
+    return (
+        cand.join(a, names[0])
+        .join(b, names[1])
+        .withColumn("_inter", F.size(F.array_intersect("sh_a", "sh_b")))
+        .withColumn("jaccard", jac)
+        .filter(F.col("jaccard") >= threshold)
+        .select(names[0], names[1], "jaccard")
+    )
+
+
+def _pigeonhole_pairs(
+    fp: DataFrame, *, bits: int, bands: int, width: int, max_distance: int
+) -> DataFrame:
+    """Pairs of (_id, _h) rows whose integer fingerprints `_h` lie
+    within Hamming distance `max_distance`: (id_a, id_b, distance),
+    id_a < id_b.
+
+    Pigeonhole banding: `bands` disjoint `width`-bit slices of the low
+    `bits` bits; at distance <= bands-1 at least one slice matches
+    exactly, so the self-join runs per (band, slice value) bucket and
+    only candidates pay the JVM-side bit_count(xor) verify. A setting
+    that breaks the guarantee raises instead of losing recall."""
+    if not (max_distance < bands and width > 0 and bands * width <= bits):
+        raise ValueError(
+            f"pigeonhole banding needs max_distance < bands and "
+            f"bands * width <= {bits} bits, width >= 1; got "
+            f"max_distance={max_distance}, bands={bands}, width={width}"
+        )
+    mask = (1 << width) - 1
+    banded = fp.select(
+        "_id",
+        "_h",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("band"),
+                        F.shiftrightunsigned(F.col("_h"), i * width)
+                        .bitwiseAND(F.lit(mask))
+                        .alias("key"),
+                    )
+                    for i in range(bands)
+                ]
+            )
+        ).alias("b"),
+    ).select("_id", "_h", "b.band", "b.key")
+    # Persist the banded keys (4 small columns per row·band): the
+    # fingerprint is usually the output of an expensive upstream — the
+    # per-token simhash vote, or a mapInPandas media decode — which the
+    # self-join would otherwise execute once per branch.
+    banded = track_persist(banded)
+    return (
+        _bucket_pairs(
+            banded,
+            ["band", "key"],
+            extra=[H.hamming(F.col("l._h"), F.col("r._h")).alias("distance")],
+        )
+        .filter(F.col("distance") <= max_distance)
+        .distinct()
+    )
+
+
+def _cap_buckets(
+    rows: DataFrame,
+    keys: Sequence[str],
+    max_size: int | None,
+    min_size: int | None = None,
+) -> DataFrame:
+    """Drop the rows of every `keys` bucket holding more than
+    `max_size` (or fewer than `min_size`) rows, so no bucket self-join
+    goes quadratic on a degenerate bucket. The size is a window count
+    over the same key the join shuffles on, so one exchange serves the
+    cap and the join."""
+    size = F.col("_bsz")
+    keep = size >= min_size if min_size is not None else F.lit(True)
+    if max_size is not None:
+        keep = keep & (size <= max_size)
+    return (
+        rows.withColumn("_bsz", F.count("*").over(Window.partitionBy(*keys)))
+        .filter(keep)
+        .drop("_bsz")
+    )
+
+
 def _banded_keys(
     docs: DataFrame,
     *,
@@ -126,8 +265,6 @@ def _banded_keys(
                 )
             )
         )
-    from pyspark.sql import Window
-
     banded = signed.select("_id", F.explode(bands_col).alias("bk")).select(
         "_id", "bk.band", "bk.band_hash"
     )
@@ -138,12 +275,7 @@ def _banded_keys(
         # (capped_band_index) over the full index, which equals the
         # fresh build's cap over the full corpus bit-for-bit.
         return track_persist(banded)
-    bsz = F.count("*").over(Window.partitionBy("band", "band_hash"))
-    return track_persist(
-        banded.withColumn("_bsz", bsz)
-        .filter(F.col("_bsz") <= max_bucket)
-        .drop("_bsz")
-    )
+    return track_persist(capped_band_index(banded, max_bucket))
 
 
 def minhash_near_dup_pairs(
@@ -186,36 +318,10 @@ def minhash_near_dup_pairs(
         band_key=band_key,
         max_bucket=max_bucket,
     )
-
-    left = banded.alias("l")
-    right = banded.alias("r")
-    candidates = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .distinct()
+    candidates = _bucket_pairs(banded, ["band", "band_hash"]).distinct()
+    return _jaccard_verify(
+        candidates, docs, docs, threshold=threshold, round_to=round_to
     )
-
-    a = docs.select(F.col("_id").alias("id_a"), F.col("_shingles").alias("sh_a"))
-    b = docs.select(F.col("_id").alias("id_b"), F.col("_shingles").alias("sh_b"))
-    jac = F.col("_inter").cast("double") / (
-        F.size("sh_a") + F.size("sh_b") - F.col("_inter")
-    ).cast("double")
-    if round_to is not None:
-        jac = F.round(jac, round_to)
-    verified = (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("_inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return verified
 
 
 def remove_duplicate_spans(
@@ -362,14 +468,7 @@ def capped_band_index(index_df: DataFrame, max_bucket: int) -> DataFrame:
     lets `start_minhash_index_sink` maintain raw band rows and stay
     bit-identical to a rebuild. One window exchange on the same
     (band, band_hash) key every downstream join shuffles on."""
-    from pyspark.sql import Window
-
-    bsz = F.count("*").over(Window.partitionBy("band", "band_hash"))
-    return (
-        index_df.withColumn("_bsz", bsz)
-        .filter(F.col("_bsz") <= max_bucket)
-        .drop("_bsz")
-    )
+    return _cap_buckets(index_df, ["band", "band_hash"], max_bucket)
 
 
 def start_minhash_index_sink(
@@ -485,20 +584,7 @@ def minhash_pairs_from_index(
     `minhash_near_dup_pairs*` re-signing the corpus — without the
     signature pipeline ever running at query time."""
     idx = capped_band_index(index_df, max_bucket)
-    left, right = idx.alias("l"), idx.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
+    cand = _bucket_pairs(idx, ["band", "band_hash"], id_col=id_col).distinct()
     touched = (
         cand.select(F.col("id_a").alias(id_col))
         .unionByName(cand.select(F.col("id_b").alias(id_col)))
@@ -508,21 +594,7 @@ def minhash_pairs_from_index(
         corpus_df.join(touched, id_col, "left_semi"),
         id_col, text_col, shingle_n,
     )
-    a = sh.select(F.col("_id").alias("id_a"), F.col("_shingles").alias("sh_a"))
-    b = sh.select(F.col("_id").alias("id_b"), F.col("_shingles").alias("sh_b"))
-    jac = F.col("_inter").cast("double") / (
-        F.size("sh_a") + F.size("sh_b") - F.col("_inter")
-    ).cast("double")
-    if round_to is not None:
-        jac = F.round(jac, round_to)
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("_inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verify(cand, sh, sh, threshold=threshold, round_to=round_to)
 
 
 def minhash_dedup_incremental(
@@ -604,16 +676,9 @@ def _incremental_pairs(
         .select(F.col("_id").alias("id_new"), F.col("_cid").alias("dup_of"))
         .distinct()
     )
-    left = new_banded.alias("l")
-    right = new_banded.alias("r")
     within = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(F.col("r._id").alias("id_new"), F.col("l._id").alias("dup_of"))
+        _bucket_pairs(new_banded, ["band", "band_hash"], names=("dup_of", "id_new"))
+        .select("id_new", "dup_of")  # group as (id_new, dup_of), like `cross`
         .distinct()
     )
     # Corpus text is touched ONLY for surfaced candidates (semi-join).
@@ -623,21 +688,10 @@ def _incremental_pairs(
     corpus_sh = _shingled_docs(corpus_cand, id_col, text_col, shingle_n)
 
     def _verify(cand: DataFrame, dup_sh: DataFrame, src: str) -> DataFrame:
-        a = new_docs.select(F.col("_id").alias("id_new"), F.col("_shingles").alias("sh_a"))
-        b = dup_sh.select(F.col("_id").alias("dup_of"), F.col("_shingles").alias("sh_b"))
-        jac = F.col("_inter").cast("double") / (
-            F.size("sh_a") + F.size("sh_b") - F.col("_inter")
-        ).cast("double")
-        if round_to is not None:
-            jac = F.round(jac, round_to)
-        return (
-            cand.join(a, "id_new")
-            .join(b, "dup_of")
-            .withColumn("_inter", F.size(F.array_intersect("sh_a", "sh_b")))
-            .withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_new", "dup_of", "jaccard", F.lit(src).alias("src"))
-        )
+        return _jaccard_verify(
+            cand, new_docs, dup_sh, names=("id_new", "dup_of"),
+            threshold=threshold, round_to=round_to,
+        ).withColumn("src", F.lit(src))
 
     return _verify(cross, corpus_sh, "corpus").unionByName(
         _verify(within, new_docs, "batch")
@@ -777,67 +831,27 @@ def simhash_near_dup_pairs(
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance.
 
-    Candidate generation blocks on prefix chunks of the fingerprint
-    (pigeonhole: at distance <= d, at least one of d+1 blocks matches
-    exactly), so the self-join is per-block, not all-pairs. Verify is
-    `bit_count(xor)` — constant time.
+    Candidate generation blocks on d+1 chunks of ``block_bits`` bits
+    of the fingerprint (`_pigeonhole_pairs`: at distance <= d, at least
+    one of d+1 blocks matches exactly), so the self-join is per-block,
+    not all-pairs; blocks that do not fit in ``bits`` raise ValueError.
+    Verify is `bit_count(xor)` — constant time.
 
     Returns (id_a, id_b, distance), id_a < id_b. ``base`` picks the
     token-hash family (see hashing.simhash); ``skip_empty`` drops
     zero-token docs (they all share fingerprint 0).
     """
-    n_blocks = max_distance + 1
-    assert block_bits * n_blocks <= bits
     toks = T.tokens(F.col(text_col))
+    if skip_empty:
+        df = df.filter(F.size(toks) > 0)
     fp = df.select(
         F.col(id_col).alias("_id"),
-        H.simhash(toks, bits, base=base).alias("_fp"),
+        H.simhash(toks, bits, base=base).alias("_h"),
     )
-    if skip_empty:
-        fp = df.select(
-            F.col(id_col).alias("_id"),
-            H.simhash(toks, bits, base=base).alias("_fp"),
-            F.size(toks).alias("_ntok"),
-        ).filter(F.col("_ntok") > 0).drop("_ntok")
-    blocks = fp.select(
-        "_id",
-        "_fp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("blk"),
-                        F.shiftrightunsigned(F.col("_fp"), i * block_bits)
-                        .bitwiseAND(F.lit((1 << block_bits) - 1))
-                        .alias("blk_val"),
-                    )
-                    for i in range(n_blocks)
-                ]
-            )
-        ).alias("b"),
-    ).select("_id", "_fp", "b.blk", "b.blk_val")
-    # Persist the blocks (id + fingerprint + block key per doc·block):
-    # the per-token simhash vote is the dominant compute and would
-    # otherwise run once per self-join branch.
-    blocks = track_persist(blocks)
-
-    l, r = blocks.alias("l"), blocks.alias("r")
-    pairs = (
-        l.join(
-            r,
-            (F.col("l.blk") == F.col("r.blk"))
-            & (F.col("l.blk_val") == F.col("r.blk_val"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(
-            F.col("l._id").alias("id_a"),
-            F.col("r._id").alias("id_b"),
-            H.hamming(F.col("l._fp"), F.col("r._fp")).alias("distance"),
-        )
-        .filter(F.col("distance") <= max_distance)
-        .distinct()
+    return _pigeonhole_pairs(
+        fp, bits=bits, bands=max_distance + 1, width=block_bits,
+        max_distance=max_distance,
     )
-    return pairs
 
 
 def ngram_jaccard_pairs(
@@ -884,8 +898,6 @@ def ngram_jaccard_pairs(
     64-bit hashes (~n²/2⁶⁵); at trillion-shingle scale switch to a
     2-column (two-seed) 128-bit key.
     """
-    from pyspark.sql import Window
-
     # filter ABOVE the persist — inside it, the optimizer pushes the
     # shingle expression below the rebalance exchange into a serial
     # single-task scan and evaluates it twice (see _shingled_docs)
@@ -900,27 +912,16 @@ def ngram_jaccard_pairs(
         "_id", F.xxhash64("shingle").alias("shingle")
     )
     # Document-frequency prune (see docstring). One row per (_id,
-    # shingle) — per-doc shingles are distinct — so the window count
+    # shingle) — per-doc shingles are distinct — so the bucket size
     # IS the document frequency.
-    dfreq = F.count("*").over(Window.partitionBy("shingle"))
-    keep = dfreq >= 2
-    if max_doc_freq is not None:
-        keep = keep & (dfreq <= max_doc_freq)
     # Persist the pruned index (16 bytes/row: id + hashed shingle) so
     # the explode + window-prune pass runs once, not per self-join
     # branch — and both branches inherit the window's (shingle)
     # partitioning from the cache, so the join adds no exchange.
-    inv = track_persist(
-        inv.withColumn("_keep", keep).filter("_keep").drop("_keep")
-    )
-
-    l, r = inv.alias("l"), inv.alias("r")
+    inv = track_persist(_cap_buckets(inv, ["shingle"], max_doc_freq, min_size=2))
     common = (
-        l.join(
-            r,
-            (F.col("l.shingle") == F.col("r.shingle")) & (F.col("l._id") < F.col("r._id")),
-        )
-        .groupBy(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
+        _bucket_pairs(inv, ["shingle"])
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_common"))
     )
     return (
@@ -949,56 +950,18 @@ def hamming_near_dup_pairs(
     pairwise loop (/root/reference/src/media_fingerprinting.py:278-310)
     with its recommended Hamming threshold <= 2 (:321-349).
 
-    Pigeonhole banding: split 64 bits into `bands` equal slices; at
-    distance <= bands-1 at least one slice matches exactly, so the
-    self-join runs per (band, slice-value) bucket. Default 4x16-bit
-    bands guarantees recall for distance <= 3 >= max_distance=2.
+    Pigeonhole banding (`_pigeonhole_pairs`): `bands` slices of
+    64 // bands bits; at distance <= bands-1 at least one slice matches
+    exactly, so the self-join runs per (band, slice-value) bucket.
+    Default 4x16-bit bands guarantees recall for distance <= 3 >=
+    max_distance=2; ``bands <= max_distance`` raises ValueError.
     Verify is JVM-side bit_count(xor).
 
     Returns (id_a, id_b, distance), id_a < id_b.
     """
-    assert 64 % bands == 0 and bands > max_distance
-    width = 64 // bands
-    mask = (1 << width) - 1
     h = df.select(F.col(id_col).alias("_id"), F.col(hash_col).cast("long").alias("_h"))
-    banded = h.select(
-        "_id",
-        "_h",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned(F.col("_h"), i * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("key"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("_id", "_h", "b.band", "b.key")
-    # Persist the banded keys (4 small columns per doc·band): the hash
-    # column is usually the output of an expensive upstream — a
-    # mapInPandas media decode in every media-dedup query — and the
-    # self-join would otherwise execute that upstream once per branch.
-    banded = track_persist(banded)
-
-    l, r = banded.alias("l"), banded.alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(
-            F.col("l._id").alias("id_a"),
-            F.col("r._id").alias("id_b"),
-            F.bit_count(F.col("l._h").bitwiseXOR(F.col("r._h"))).alias("distance"),
-        )
-        .filter(F.col("distance") <= max_distance)
-        .distinct()
+    return _pigeonhole_pairs(
+        h, bits=64, bands=bands, width=64 // bands, max_distance=max_distance
     )
 
 
@@ -1099,13 +1062,9 @@ def fuzzy_pairs_edit1(df: DataFrame, col: str) -> DataFrame:
         ),
     )
     inv = df.select(s.alias("_s"), F.explode(variants).alias("_var"))
-    a = inv.alias("a")
-    b = inv.alias("b")
-    cand = (
-        a.join(b, (F.col("a._var") == F.col("b._var")) & (F.col("a._s") < F.col("b._s")))
-        .select(F.col("a._s").alias("name_a"), F.col("b._s").alias("name_b"))
-        .dropDuplicates(["name_a", "name_b"])
-    )
+    cand = _bucket_pairs(
+        inv, ["_var"], id_col="_s", names=("name_a", "name_b")
+    ).distinct()
     return (
         cand.withColumn("dist", F.levenshtein("name_a", "name_b"))
         .filter(F.col("dist") <= 1)

@@ -295,18 +295,15 @@ def cosine_near_dup_pairs_lsh(
     # Tiny (bucket, id) projection, but each self-join branch would
     # otherwise re-run the plane projections over every vector.
     from filesystemagent_spark.caching import track_persist
+    from filesystemagent_spark.operators.dedup import _bucket_pairs
 
     banded = track_persist(banded)
-    a = banded.select("bucket", F.col("_id").alias("id_a"))
-    b = banded.select("bucket", F.col("_id").alias("id_b"))
-    candidates = (
-        a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-    )
+    candidates = _bucket_pairs(banded, ["bucket"])
     if n_tables > 1:
         # Dedup BEFORE the vectors attach: the cross-table duplicate
         # shuffle moves 16-byte id pairs, not 2 embedding arrays per
         # candidate (was the dominant cost of this operator).
-        candidates = candidates.dropDuplicates(["id_a", "id_b"])
+        candidates = candidates.distinct()
     va = rows.select(
         F.col("_id").alias("id_a"), F.col("_v").alias("_va"), F.col("_n").alias("_na")
     )

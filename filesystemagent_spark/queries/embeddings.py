@@ -576,11 +576,11 @@ def embedding_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Codebooks train on vectors normalized to unit L2, making PQ's L2
     ranking equal cosine ranking (operators/similarity.normalize).
     """
+    from filesystemagent_spark.caching import track_persist
     from filesystemagent_spark.functions import vectors as V
     from filesystemagent_spark.operators.relational import grouped_top_k
 
-    emb = S.normalize(Catalog(spark, sf_dir).embeddings)
-    emb.cache()
+    emb = track_persist(S.normalize(Catalog(spark, sf_dir).embeddings))
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     book = S.pq_codebooks(
         emb, id_col="vec_id", vec_col="embedding", dim=DIM, m=8, k=16, max_iter=2

@@ -1090,6 +1090,33 @@ class TxTable:
 
     # -- write path --------------------------------------------------
 
+    @staticmethod
+    def _staged(out: str | None, schema) -> tuple[list[str], str]:
+        """(the non-empty `.parquet` files staged under ``out``, sorted;
+        the DDL of ``schema``). ``out=None`` means nothing was staged.
+
+        0-row part files (empty partitions from empty-schema unions,
+        empty buckets etc.) are deleted at the staging boundary: their
+        null min/max stats would force a conservative rewrite on EVERY
+        subsequent merge/delete, and they'd keep their dir permanently
+        partial for the dir-grouped full-scan planner. The footer read
+        is one op per staged file, and `_footer_stats_one` warms the
+        footer memo, so the commit's stats collection never re-parses
+        these footers."""
+        files = []
+        for f in sorted(os.listdir(out)) if out is not None else ():
+            p = os.path.join(out, f)
+            if not f.endswith(".parquet"):
+                continue
+            if _footer_stats_one(p)["__rows__"][0] > 0:
+                files.append(p)
+            else:
+                os.unlink(p)
+        ddl = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in schema.fields
+        )
+        return files, ddl
+
     def _write_data(self, df: DataFrame) -> tuple[list[str], str]:
         """Stage df as immutable parquet under data/, return (files,
         schema ddl). Data is invisible until a manifest references it,
@@ -1097,30 +1124,7 @@ class TxTable:
         _reject_reserved_columns(df)
         out = os.path.join(self.data_dir, uuid.uuid4().hex)
         df.write.parquet(out)
-        staged = sorted(
-            os.path.join(out, f)
-            for f in os.listdir(out)
-            if f.endswith(".parquet")
-        )
-        # Drop 0-row part files (empty partitions from empty-schema
-        # unions etc.) at the staging boundary: their null min/max
-        # stats would force a conservative rewrite on EVERY subsequent
-        # merge/delete, and they'd keep their dir permanently partial
-        # for the dir-grouped full-scan planner. The footer read is
-        # one op per staged file (the commit reads footers for stats
-        # anyway).
-        files = []
-        for f in staged:
-            # _footer_stats_one warms the footer memo, so the commit's
-            # stats collection never re-parses these footers
-            if _footer_stats_one(f)["__rows__"][0] > 0:
-                files.append(f)
-            else:
-                os.unlink(f)
-        ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-        )
-        return files, ddl
+        return self._staged(out, df.schema)
 
     def _write_data_parts(
         self, df: DataFrame, part_col, values: tuple[str, ...], cols: list[str]
@@ -1158,30 +1162,16 @@ class TxTable:
         out_df.write.partitionBy(marker).parquet(wrapper)
         import shutil
 
+        schema = out_df.drop(marker).schema
         sides: dict[str, list[str]] = {}
-        for side in values:
+        for side in values:  # never empty: the verbs split 2 or 3 ways
             src = os.path.join(wrapper, f"{marker}={side}")
-            files: list[str] = []
+            dst = None
             if os.path.isdir(src):
                 dst = os.path.join(self.data_dir, uuid.uuid4().hex)
                 os.rename(src, dst)
-                for f in sorted(os.listdir(dst)):
-                    p = os.path.join(dst, f)
-                    if not f.endswith(".parquet"):
-                        continue
-                    # same 0-row drop as _write_data (empty partitions'
-                    # null stats would force conservative rewrites);
-                    # warms the footer memo for the commit
-                    if _footer_stats_one(p)["__rows__"][0] > 0:
-                        files.append(p)
-                    else:
-                        os.unlink(p)
-            sides[side] = files
+            sides[side], ddl = self._staged(dst, schema)
         shutil.rmtree(wrapper, ignore_errors=True)
-        ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in out_df.drop(marker).schema.fields
-        )
         return sides, ddl
 
     def _write_data_split(
@@ -1230,19 +1220,8 @@ class TxTable:
             .saveAsTable(tmp)
         )
         spark.sql(f"DROP TABLE IF EXISTS {tmp}")  # external: files survive
-        files = []
-        for f in sorted(os.listdir(out)):
-            p = os.path.join(out, f)
-            if not f.endswith(".parquet"):
-                continue
-            if _footer_stats_one(p)["__rows__"][0] > 0:
-                files.append(p)
-            else:
-                os.unlink(p)  # empty bucket — Spark treats missing as empty
-        ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-        )
-        return files, ddl
+        # an empty bucket's file is dropped: Spark treats missing as empty
+        return self._staged(out, df.schema)
 
     def read_bucketed(
         self, spark: SparkSession, version: int | None = None

@@ -153,3 +153,41 @@ def test_concurrent_scopes_release_each_frame_once():
     assert caching.tracked_count() == start
     assert len(frames) == 8 * 200 * 2
     assert all(f.unpersisted == 1 for f in frames)
+
+
+def test_embedding_knn_pq_leaves_no_session_cache(spark, sf_dir):
+    """Every frame embedding_knn_pq persists is tracked, so releasing
+    the tracked caches leaves the session's cache manager empty (a
+    bare ``emb.cache()`` used to stay cached for the session's
+    lifetime)."""
+    import os
+
+    from filesystemagent_spark.queries.embeddings import embedding_knn_pq
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    caching.release_tracked_caches(blocking=True)
+    spark.catalog.clearCache()
+    assert embedding_knn_pq(spark, sf01).collect()
+    caching.release_tracked_caches(blocking=True)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_queries_persist_only_through_track_persist():
+    """No query module calls ``.cache()`` or ``.persist(`` itself:
+    persists there go through ``caching.track_persist``, the one owner
+    that can release them."""
+    import ast
+    import pathlib
+
+    import filesystemagent_spark.queries as Q
+
+    offenders = []
+    for path in sorted(pathlib.Path(Q.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("cache", "persist")
+            ):
+                offenders.append(f"{path.name}:{node.lineno}")
+    assert offenders == []

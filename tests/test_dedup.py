@@ -4,6 +4,8 @@ topologies the gate oracle can't reach (chains, multi-hop merges)."""
 
 from __future__ import annotations
 
+import pytest
+
 from filesystemagent_spark.catalog import Catalog
 from filesystemagent_spark.operators.dedup import (
     hamming_near_dup_pairs,
@@ -42,6 +44,16 @@ def test_hamming_banding_excludes_beyond_threshold(spark):
     rows = [(1, base), (2, base ^ 0x7)]  # distance 3 > max 2
     df = spark.createDataFrame(rows, "id long, h long")
     assert hamming_near_dup_pairs(df, "id", "h", max_distance=2).count() == 0
+    # settings that break the pigeonhole guarantee raise (an assert
+    # vanishes under ``python -O`` and recall would drop silently)
+    from filesystemagent_spark.operators.dedup import simhash_near_dup_pairs
+
+    for bands in (2, 128):  # bands <= max_distance; zero-bit slices
+        with pytest.raises(ValueError, match="pigeonhole"):
+            hamming_near_dup_pairs(df, "id", "h", max_distance=2, bands=bands)
+    docs = spark.createDataFrame([(1, "a b c")], "id long, text string")
+    with pytest.raises(ValueError, match="pigeonhole"):  # 4 x 8 bits > 16
+        simhash_near_dup_pairs(docs, "id", "text", bits=16, block_bits=8)
 
 
 def test_clusters_chain_topology(spark):
