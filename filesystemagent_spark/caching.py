@@ -18,10 +18,18 @@ drains the whole registry; hosts that run one unit of work at a time
 (a notebook between stages, ``perfbench/run.py`` and
 ``scripts/driver_sim.py`` between queries) call it in between. Callers that never release still work:
 they just hold warm caches until storage pressure evicts them.
+
+``staging_dir`` is the one way a query makes a scratch directory (TxTable
+files, stream checkpoints and sources) that its returned, still lazy
+DataFrame reads. The directory follows the same rules as a persisted
+frame: it is removed when its scope exits or the registry is drained,
+never before, and removing one that is already gone is a no-op.
 """
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import threading
 from collections.abc import Iterator
 from contextlib import contextmanager
@@ -30,9 +38,18 @@ from contextvars import ContextVar
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
+# A tracked item is a persisted DataFrame or a staging directory path.
 _LOCK = threading.Lock()  # guards every change to _TRACKED
-_TRACKED: list[DataFrame] = []
-_SCOPE: ContextVar[list[DataFrame] | None] = ContextVar("tracked_scope", default=None)
+_TRACKED: list[DataFrame | str] = []
+_SCOPE: ContextVar[list[DataFrame | str] | None] = ContextVar("tracked_scope", default=None)
+
+
+def _track(item: DataFrame | str) -> None:
+    scope = _SCOPE.get()
+    with _LOCK:
+        _TRACKED.append(item)
+    if scope is not None:
+        scope.append(item)
 
 
 def track_persist(
@@ -40,52 +57,62 @@ def track_persist(
 ) -> DataFrame:
     """``df.persist(level)``, registered for later release."""
     persisted = df.persist(level)
-    scope = _SCOPE.get()
-    with _LOCK:
-        _TRACKED.append(persisted)
-    if scope is not None:
-        scope.append(persisted)
+    _track(persisted)
     return persisted
 
 
+def staging_dir(prefix: str) -> str:
+    """``tempfile.mkdtemp(prefix=prefix)``, registered for removal on
+    release."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _track(path)
+    return path
+
+
 def tracked_count() -> int:
-    return len(_TRACKED)
+    """Persisted frames still tracked (staging directories not counted)."""
+    with _LOCK:
+        return sum(1 for item in _TRACKED if not isinstance(item, str))
 
 
 @contextmanager
 def tracked_scope() -> Iterator[None]:
     """Unpersist, on exit, the frames this thread tracked inside the
-    block and outside any nested scope, unless a global release has
-    already dropped them."""
-    frames: list[DataFrame] = []
-    token = _SCOPE.set(frames)
+    block and outside any nested scope, and remove its staging
+    directories, unless a global release has already dropped them."""
+    items: list[DataFrame | str] = []
+    token = _SCOPE.set(items)
     try:
         yield
     finally:
         _SCOPE.reset(token)
-        mine = {id(df) for df in frames}
+        mine = {id(item) for item in items}
         with _LOCK:
-            held = [df for df in _TRACKED if id(df) in mine]
-            _TRACKED[:] = [df for df in _TRACKED if id(df) not in mine]
-        _unpersist(held, blocking=False)
+            held = [item for item in _TRACKED if id(item) in mine]
+            _TRACKED[:] = [item for item in _TRACKED if id(item) not in mine]
+        _release(held, blocking=False)
 
 
 def release_tracked_caches(blocking: bool = False) -> int:
-    """Unpersist every tracked intermediate; returns how many were
-    released. Safe to call at any time: unpersist on an already-freed
-    or garbage DataFrame is a no-op, and a dead session's failures are
-    swallowed (the JVM-side cache died with the session)."""
+    """Unpersist every tracked intermediate and remove every staging
+    directory; returns how many frames were released. Safe to call at
+    any time: unpersist on an already-freed or garbage DataFrame is a
+    no-op, a dead session's failures are swallowed (the JVM-side cache
+    died with the session), and a directory already gone is skipped."""
     with _LOCK:
         held = _TRACKED[:]
         _TRACKED.clear()
-    return _unpersist(held, blocking)
+    return _release(held, blocking)
 
 
-def _unpersist(frames: list[DataFrame], blocking: bool) -> int:
+def _release(items: list[DataFrame | str], blocking: bool) -> int:
     released = 0
-    for df in reversed(frames):  # newest first: a frame before those it reads
+    for item in reversed(items):  # newest first: a frame before those it reads
+        if isinstance(item, str):
+            shutil.rmtree(item, ignore_errors=True)
+            continue
         try:
-            df.unpersist(blocking)
+            item.unpersist(blocking)
             released += 1
         except Exception:
             pass

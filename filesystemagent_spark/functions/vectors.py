@@ -1,9 +1,13 @@
 """Vector math over `array<float>` embedding columns — JVM expressions.
 
 Brute-force building blocks for similarity search (BASELINE.json
-north-star). `F.aggregate`/`F.zip_with` keep the math inside codegen;
-no Python crossing per row. For the 100 TB path these compose with
-LSH bucketing (operators/similarity.py) so the cross join never
+north-star). `F.aggregate`/`F.zip_with` are higher-order functions:
+they stay in the JVM with no Python crossing per row, but Spark
+interprets them, because whole-stage codegen does not compile lambda
+functions. The LSH near-dup verify, which runs one dot per candidate
+pair, uses the Arrow kernel `pqkernels.pair_dot` instead; it returns
+the same doubles as `dot`. For the 100 TB path these compose with LSH
+bucketing (operators/similarity.py) so the cross join never
 materializes.
 """
 

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from filesystemagent_spark.caching import staging_dir
 from filesystemagent_spark.catalog import Catalog
 from filesystemagent_spark.functions import text as T
 from filesystemagent_spark.operators import dedup as D
@@ -767,14 +768,13 @@ def doc_bm25_from_stored_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the difference between a full corpus scan per query
     and reading only the matched terms' postings; index build is the
     amortized one-time (and incrementally maintainable) cost."""
-    import tempfile
 
     from filesystemagent_spark.operators.invindex import (
         bm25_from_index,
         build_bm25_index,
     )
 
-    stage = tempfile.mkdtemp(prefix="bm25_index_")
+    stage = staging_dir("bm25_index_")
     build_bm25_index(
         _doc_text_rebalanced(spark, sf_dir), stage, id_col="doc_id",
         text_col="text",
@@ -814,7 +814,6 @@ def doc_bm25_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final corpus — which is exactly what the oracle computes over
     the SQL-replayed DML. A missed retraction, a double-applied df
     delta, or a stale scalar shifts the hash."""
-    import tempfile
 
     from filesystemagent_spark.operators.invindex import (
         bm25_from_index,
@@ -822,7 +821,7 @@ def doc_bm25_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from filesystemagent_spark.sources.txtable import TxTable
 
-    stage = tempfile.mkdtemp(prefix="bm25_inc_")
+    stage = staging_dir("bm25_inc_")
     src = os.path.join(stage, "docs")
     idx = os.path.join(stage, "index")
     ckpt = os.path.join(stage, "ckpt")
@@ -1396,14 +1395,13 @@ def doc_minhash_incremental_stored(
     between scanning the whole band index per batch and reading
     O(batch·bands) buckets' files; tests/test_dedup.py gates the
     files actually read."""
-    import tempfile
 
     from filesystemagent_spark.operators.dedup import (
         minhash_dedup_against_stored_index,
     )
     from filesystemagent_spark.sources.txtable import TxTable
 
-    stage = tempfile.mkdtemp(prefix="mh_stored_idx_")
+    stage = staging_dir("mh_stored_idx_")
     docs = _doc_text_rebalanced(spark, sf_dir)
     corpus = docs.filter(F.col("doc_id") % 4 != 0)
     batch = docs.filter(F.col("doc_id") % 4 == 0)
@@ -1506,7 +1504,6 @@ def doc_minhash_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame
     over the SQL-replayed DML. A missed band retraction, a stale
     signature, or a double-merged row surfaces or hides a pair and
     shifts the hash."""
-    import tempfile
 
     from filesystemagent_spark.operators.dedup import (
         minhash_pairs_from_index,
@@ -1514,7 +1511,7 @@ def doc_minhash_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     from filesystemagent_spark.sources.txtable import TxTable
 
-    stage = tempfile.mkdtemp(prefix="mh_inc_idx_")
+    stage = staging_dir("mh_inc_idx_")
     src = os.path.join(stage, "docs")
     idx = os.path.join(stage, "index")
     ckpt = os.path.join(stage, "ckpt")

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from filesystemagent_spark.caching import staging_dir
 from filesystemagent_spark.catalog import Catalog
 from filesystemagent_spark.operators import similarity as S
 from filesystemagent_spark.functions import vectors as V
@@ -402,7 +403,6 @@ def embedding_stored_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFr
     answer equality are pinned in
     tests/test_similarity.py::test_ivf_feed_sink_tracks_dml."""
     import os as _os
-    import tempfile
 
     from filesystemagent_spark.operators.similarity import (
         start_ivf_index_sink,
@@ -410,7 +410,7 @@ def embedding_stored_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFr
     from filesystemagent_spark.sources.txtable import TxTable
 
     emb = Catalog(spark, sf_dir).embeddings
-    stage = tempfile.mkdtemp(prefix="ivf_inc_")
+    stage = staging_dir("ivf_inc_")
     src = _os.path.join(stage, "corpus")
     idx = _os.path.join(stage, "index")
     ckpt = _os.path.join(stage, "ckpt")
@@ -964,14 +964,13 @@ def embedding_knn_stored_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only; exact-equivalence of the stored vs in-memory path and
     the incremental accept loop are pinned in
     tests/test_similarity.py::test_ivf_index_txtable_roundtrip_incremental."""
-    import tempfile
 
     from filesystemagent_spark.sources.txtable import TxTable
 
     emb = Catalog(spark, sf_dir).embeddings
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
 
-    stage = tempfile.mkdtemp(prefix="ivf_index_")
+    stage = staging_dir("ivf_index_")
     centroids = S.centroids_from_labels(
         emb, label_col="label", vec_col="embedding", dim=DIM
     )
@@ -1024,7 +1023,6 @@ def embedding_semdedup_incremental(
     sweep over the union corpus is pinned in
     tests/test_similarity.py::test_semdedup_incremental_matches_direct_same_cell_sweep."""
     import os as _os
-    import tempfile
 
     from filesystemagent_spark.operators.similarity import (
         semdedup_incremental,
@@ -1033,7 +1031,7 @@ def embedding_semdedup_incremental(
     from filesystemagent_spark.sources.txtable import TxTable
 
     emb = Catalog(spark, sf_dir).embeddings
-    stage = tempfile.mkdtemp(prefix="semdedup_inc_")
+    stage = staging_dir("semdedup_inc_")
     src = _os.path.join(stage, "corpus")
     idx = _os.path.join(stage, "index")
     ckpt = _os.path.join(stage, "ckpt")
@@ -1083,7 +1081,6 @@ def embedding_stored_pq_incremental(
     stored-vs-in-memory answer equality are pinned in
     tests/test_similarity.py::test_pq_feed_sink_tracks_dml_and_matches_fresh_encode."""
     import os as _os
-    import tempfile
 
     from filesystemagent_spark.operators.similarity import (
         start_pq_index_sink,
@@ -1093,7 +1090,7 @@ def embedding_stored_pq_incremental(
     emb = S.normalize(Catalog(spark, sf_dir).embeddings).select(
         "vec_id", "embedding"
     )
-    stage = tempfile.mkdtemp(prefix="pq_inc_")
+    stage = staging_dir("pq_inc_")
     src = _os.path.join(stage, "corpus")
     idx = _os.path.join(stage, "index")
     ckpt = _os.path.join(stage, "ckpt")
@@ -1139,14 +1136,13 @@ def embedding_knn_stored_ivf_auto_with_meta(
     meta) — exposed so the pytest gate asserts the estimate and the
     realized agreement on the same path the registry runs."""
     import os as _os
-    import tempfile
 
     from filesystemagent_spark.operators.anntune import knn_stored_ivf_auto
     from filesystemagent_spark.sources.txtable import TxTable
 
     emb = Catalog(spark, sf_dir).embeddings
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    stage = tempfile.mkdtemp(prefix="ivf_auto_idx_")
+    stage = staging_dir("ivf_auto_idx_")
     centroids = S.centroids_from_labels(
         emb, label_col="label", vec_col="embedding", dim=DIM
     )
@@ -1196,14 +1192,13 @@ def embedding_knn_ivfpq_auto_with_meta(
     update + keyed delete), and serving composes probe-pruned cells
     with ADC + exact rerank (operators/similarity.knn_ivfpq)."""
     import os as _os
-    import tempfile
 
     from filesystemagent_spark.operators.anntune import knn_stored_ivfpq_auto
     from filesystemagent_spark.operators.similarity import start_pq_index_sink
     from filesystemagent_spark.sources.txtable import TxTable
 
     emb = S.normalize(Catalog(spark, sf_dir).embeddings)
-    stage = tempfile.mkdtemp(prefix="ivfpq_")
+    stage = staging_dir("ivfpq_")
     src = _os.path.join(stage, "corpus")
     idx = _os.path.join(stage, "index")
     ckpt = _os.path.join(stage, "ckpt")
@@ -1314,7 +1309,6 @@ def embedding_knn_ivfpq_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`embedding_knn_ivfpq`, auto-tuned) stays rows-only; this anchor
     is what lets its tuner terminate met."""
     import os as _os
-    import tempfile
 
     from filesystemagent_spark.operators.similarity import (
         knn_ivfpq,
@@ -1323,7 +1317,7 @@ def embedding_knn_ivfpq_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from filesystemagent_spark.sources.txtable import TxTable
 
     emb = Catalog(spark, sf_dir).embeddings
-    stage = tempfile.mkdtemp(prefix="ivfpq_exact_")
+    stage = staging_dir("ivfpq_exact_")
     src = _os.path.join(stage, "corpus")
     idx = _os.path.join(stage, "index")
     ckpt = _os.path.join(stage, "ckpt")

@@ -6,12 +6,12 @@ model guarantee made into a correctness gate."""
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from filesystemagent_spark.caching import staging_dir
 from filesystemagent_spark.queries import register
 from filesystemagent_spark.session import stream_session
 
@@ -22,7 +22,7 @@ from filesystemagent_spark.session import stream_session
 def _stage_symlink(sf_dir: str, prefix: str) -> str:
     """A tempdir with the events table symlinked in — file sources need
     DIRECTORIES, and the harness table is a single parquet file."""
-    stage = tempfile.mkdtemp(prefix=prefix)
+    stage = staging_dir(prefix)
     os.symlink(
         os.path.join(sf_dir, "events.parquet"),
         os.path.join(stage, "events.parquet"),
@@ -370,7 +370,7 @@ def events_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFr
         start_idempotent_file_sink,
     )
 
-    stage = tempfile.mkdtemp(prefix="events_increm_")
+    stage = staging_dir("events_increm_")
     src_dir = os.path.join(stage, "src")
     # Re-stage as 4 files so availableNow+maxFilesPerTrigger=1 yields
     # four genuine micro-batches (the harness table is a single file).
@@ -468,7 +468,7 @@ def events_stream_late_accounting(spark: SparkSession, sf_dir: str) -> DataFrame
     from filesystemagent_spark.catalog import Catalog
 
     ev = Catalog(spark, sf_dir).events.select("event_id", "ts")
-    stage = tempfile.mkdtemp(prefix="events_late_")
+    stage = staging_dir("events_late_")
     bounds = ev.agg(F.min("ts").alias("t0"), F.max("ts").alias("t1")).first()
     t0, t1 = bounds["t0"], bounds["t1"]
     batches = [
@@ -559,7 +559,7 @@ def events_stream_interval_join_outer(
     ev = Catalog(spark, sf_dir).events.select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    stage = tempfile.mkdtemp(prefix="events_sjoin_outer_")
+    stage = staging_dir("events_sjoin_outer_")
     src = _stage_ordered_batches(
         stage, [ev, *_watermark_tick_batches(spark, ev)]
     )
@@ -622,7 +622,7 @@ def events_stream_interval_join_full(
     ev = Catalog(spark, sf_dir).events.select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    stage = tempfile.mkdtemp(prefix="events_sjoin_full_")
+    stage = staging_dir("events_sjoin_full_")
     src = _stage_ordered_batches(
         stage, [ev, *_watermark_tick_batches(spark, ev)]
     )

@@ -19,11 +19,11 @@ identical row sets with no clock, uuid, or ordering dependence.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from filesystemagent_spark.caching import staging_dir
 from filesystemagent_spark.catalog import Catalog
 from filesystemagent_spark.queries import register
 from filesystemagent_spark.sources.txtable import TxTable
@@ -103,7 +103,7 @@ def events_txtable_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     modular-predicate slices of the fixture — deterministic in both
     engines."""
     ev = Catalog(spark, sf_dir).events
-    stage = tempfile.mkdtemp(prefix="events_txdml_")
+    stage = staging_dir("events_txdml_")
     t = TxTable(os.path.join(stage, "tbl"))
     t.init(ev)
 
@@ -179,7 +179,7 @@ def events_txtable_cdf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from filesystemagent_spark.sources.txchanges import register_txtable_changes
 
     ev = Catalog(spark, sf_dir).events.where(F.col("user_id") % 10 == 0)
-    stage = tempfile.mkdtemp(prefix="events_cdf_stream_")
+    stage = staging_dir("events_cdf_stream_")
     t = TxTable(os.path.join(stage, "tbl"))
     t.init(ev)
     ups = (
@@ -261,7 +261,7 @@ def events_txtable_mor_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     bug, an over-broad tombstone, a missed pre-image, or a feed image
     leaking already-deleted rows each shifts a hashed value."""
     ev = Catalog(spark, sf_dir).events
-    stage = tempfile.mkdtemp(prefix="events_txmor_")
+    stage = staging_dir("events_txmor_")
     t = TxTable(os.path.join(stage, "tbl"))
     t.init(ev)
     t.delete_where(
@@ -343,7 +343,7 @@ def events_txtable_incremental_join(spark: SparkSession, sf_dir: str) -> DataFra
     right = ev.select("user_id").distinct().withColumn(
         "tier", F.col("user_id") % 7
     )
-    stage = tempfile.mkdtemp(prefix="events_ivm_join_")
+    stage = staging_dir("events_ivm_join_")
     src = TxTable(os.path.join(stage, "src"))
 
     def drain():
@@ -445,7 +445,7 @@ def events_txtable_bidirectional_join(
     right = ev.select("user_id").distinct().withColumn(
         "tier", F.col("user_id") % 7
     )
-    stage = tempfile.mkdtemp(prefix="events_bidir_join_")
+    stage = staging_dir("events_bidir_join_")
     lp, rp = os.path.join(stage, "L"), os.path.join(stage, "R")
     L, R = TxTable(lp), TxTable(rp)
 
@@ -551,7 +551,7 @@ def events_txtable_update_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     be the post-DELETE matching rows, not the raw base)."""
     ev = Catalog(spark, sf_dir).events
     base = ev.where(F.col("user_id") % 10 == 3)
-    stage = tempfile.mkdtemp(prefix="events_txupdate_")
+    stage = staging_dir("events_txupdate_")
     t = TxTable(os.path.join(stage, "tbl"))
     t.init(base)
     t.delete_where(

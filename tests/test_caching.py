@@ -173,9 +173,10 @@ def test_embedding_knn_pq_leaves_no_session_cache(spark, sf_dir):
 
 
 def test_queries_persist_only_through_track_persist():
-    """No query module calls ``.cache()`` or ``.persist(`` itself:
-    persists there go through ``caching.track_persist``, the one owner
-    that can release them."""
+    """No query module calls ``.cache()``, ``.persist(`` or
+    ``tempfile.mkdtemp`` itself: persists there go through
+    ``caching.track_persist`` and scratch directories through
+    ``caching.staging_dir``, the one owner that can release them."""
     import ast
     import pathlib
 
@@ -187,7 +188,54 @@ def test_queries_persist_only_through_track_persist():
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr in ("cache", "persist")
+                and node.func.attr in ("cache", "persist", "mkdtemp")
             ):
                 offenders.append(f"{path.name}:{node.lineno}")
     assert offenders == []
+
+
+def test_staging_dirs_follow_scope_and_release_rules(tmp_path, monkeypatch):
+    """A staging dir lives until its tracked_scope() exits or the
+    registry is drained, and removing one already gone is a no-op (a
+    host may clear its temp dir before it releases)."""
+    import os
+    import shutil
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    caching.release_tracked_caches()
+    outer = caching.staging_dir("outer_")
+    with caching.tracked_scope():
+        inner = caching.staging_dir("inner_")
+        assert os.path.isdir(inner)
+    assert not os.path.exists(inner)
+    assert os.path.isdir(outer)
+    gone = caching.staging_dir("gone_")
+    shutil.rmtree(gone)
+    assert caching.tracked_count() == 0  # dirs are not persisted frames
+    assert caching.release_tracked_caches() == 0
+    assert not os.path.exists(outer)
+    assert os.listdir(tmp_path) == []
+
+
+def test_stored_minhash_index_leaves_no_staging_dir(spark, sf_dir):
+    """doc_minhash_incremental_stored stages its band index as a
+    TxTable under the temp dir; releasing after the collect must remove
+    it (every call used to leave an ``mh_stored_idx_*`` directory)."""
+    import os
+    import tempfile
+
+    from filesystemagent_spark.queries import registry
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    tmp = tempfile.gettempdir()
+
+    def staged() -> set[str]:
+        return {n for n in os.listdir(tmp) if n.startswith("mh_stored_idx_")}
+
+    caching.release_tracked_caches(blocking=True)
+    before = staged()
+    assert registry()["doc_minhash_incremental_stored"].fn(spark, sf01).collect()
+    assert staged() - before  # the index is staged while the result is live
+    caching.release_tracked_caches(blocking=True)
+    assert staged() - before == set()

@@ -546,3 +546,41 @@ def test_hard_example_mining_single_scored_pass(spark, sf_dir):
     branch (4 in the round-5 shape)."""
     plan = formatted_plan(QUERIES["embedding_hard_examples"].fn(spark, sf_dir))
     assert plan.count("Location:") <= 2, plan
+
+
+def test_lsh_verify_runs_arrow_kernel_once_below_hash_exchange(spark, sf_dir):
+    """embedding_near_dup_lsh verifies its candidates with the Arrow dot
+    kernel, evaluated by one ArrowEvalPython node (no interpreted
+    zip_with/aggregate dot left), in the stage under the operator's
+    hash exchange on (id_a, id_b). The final sort's range exchange reads
+    that hash exchange directly, so its bounds-sampling job reads
+    shuffle files instead of re-running the verify stage."""
+    import os
+
+    from filesystemagent_spark.caching import release_tracked_caches
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    df = QUERIES["embedding_near_dup_lsh"].fn(spark, sf01)
+    assert df.collect()
+    plan = _strip_initial_plans(df._jdf.queryExecution().executedPlan().toString())
+    release_tracked_caches()
+    assert "isFinalPlan=true" in plan, plan
+    assert "zip_with" not in plan, plan
+    assert plan.count("ArrowEvalPython [pair_dot(") == 1, plan
+
+    import re
+
+    lines = plan.splitlines()
+    # the operator name of each line of the final plan, top down
+    ops = [
+        re.split(r"[ (\[]", re.sub(r"^[\s:+-]*(\*\(\d+\) )?", "", line), maxsplit=1)[0]
+        for line in lines
+    ]
+    rng = next(i for i, l in enumerate(lines) if "Exchange rangepartitioning(id_a" in l)
+    hsh = next(i for i in range(rng + 1, len(lines)) if ops[i] == "Exchange")
+    assert "Exchange hashpartitioning(id_a" in lines[hsh] and "id_b" in lines[hsh], plan
+    assert set(ops[rng + 1:hsh]) <= {"AQEShuffleRead", "ShuffleQueryStage"}, plan
+    # the kernel runs in the stage directly under that hash exchange
+    dot = next(i for i, l in enumerate(lines) if "ArrowEvalPython [pair_dot(" in l)
+    assert hsh < dot, plan
+    assert not any("QueryStage" in ops[i] for i in range(hsh + 1, dot)), plan

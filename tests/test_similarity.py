@@ -540,6 +540,94 @@ def test_vector_kernels_null_propagate_bad_rows(spark):
     assert got2[1] == [3]  # plane0 dot=1 >= 0; plane1 dot=+0.0 >= 0 -> both bits
 
 
+def test_lsh_buckets_eval_sigs_once_and_skip_bad_rows(spark):
+    """_multi_table_buckets evaluates the signature UDF once per row
+    (posexplode's inferred size() filter used to add a second
+    ArrowEvalPython below the projection), and a NULL or wrong-length
+    vector still gets no bucket row."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, None), (3, [1.0, 2.0]),
+         (4, [0.0, 1.0, 0.0, 0.0])],
+        "id bigint, v array<double>",
+    )
+    banded = S._multi_table_buckets(df, vec_col="v", dim=4, n_planes=2, n_tables=3, seed=7)
+    rows = banded.select("id", "bucket").collect()
+    plan = banded._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython [sigs(") == 1, plan
+    per_id = {}
+    for r in rows:
+        per_id.setdefault(r.id, set()).add(r.bucket.table)
+    assert per_id == {1: {0, 1, 2}, 4: {0, 1, 2}}
+
+
+def _dot_pairs(spark, pairs, n_partitions=1):
+    from filesystemagent_spark.functions import vectors as V
+    from filesystemagent_spark.functions.pqkernels import make_pair_dot_udf
+
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)],
+        "i bigint, a array<float>, b array<float>",
+    ).repartition(n_partitions)
+    rows = df.select(
+        "i",
+        make_pair_dot_udf()("a", "b").alias("kernel"),
+        V.dot(F.col("a"), F.col("b")).alias("hof"),
+    ).collect()
+    return {r.i: (r.kernel, r.hof) for r in rows}
+
+
+def test_pair_dot_kernel_bit_identical_to_hof_dot(spark):
+    """The Arrow dot kernel that verifies LSH candidates must return
+    the same double as the V.dot expression (the oracle digest hashes
+    the rounded cosine), on random 64-d float vectors spread over
+    several Arrow batches (one per partition)."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    n = 3000
+    scale = rng.choice([1e-3, 1.0, 1e3], size=(n, 1))
+    A = (rng.standard_normal((n, 64)) * scale).astype(np.float32)
+    B = rng.standard_normal((n, 64)).astype(np.float32)
+    got = _dot_pairs(spark, [(a.tolist(), b.tolist()) for a, b in zip(A, B)], 4)
+    assert len(got) == n
+    mismatched = [
+        i for i, (k, h) in got.items() if k is None or k.hex() != h.hex()
+    ]
+    assert mismatched == []
+
+
+def test_pair_dot_kernel_null_and_edge_rows(spark):
+    """Same NULLs as V.dot: a NULL array, a NULL element or unequal
+    lengths give NULL; empty arrays and zero vectors give +0.0."""
+    cases = [
+        (None, [1.0, 2.0]),          # NULL array
+        ([1.0, 2.0], None),
+        ([1.0, None], [1.0, 2.0]),   # NULL element
+        ([1.0, 2.0], [1.0, 2.0, 3.0]),  # unequal lengths
+        ([], []),                    # empty
+        ([0.0, 0.0], [0.0, 0.0]),    # zero vectors
+        ([-0.0, 1.0], [1.0, 0.0]),   # a -0.0 product folds to +0.0
+        ([1.5, -2.0, 4.0], [2.0, 0.5, 0.25]),
+    ]
+    got = _dot_pairs(spark, cases)
+    assert [got[i][0] for i in range(len(cases))] == [
+        None, None, None, None, 0.0, 0.0, 0.0, 3.0
+    ]
+    for i, (k, h) in got.items():
+        assert (k is None and h is None) or k.hex() == h.hex(), (cases[i], k, h)
+
+    # a sliced batch whose valid rows do not lie back to back (the NULL
+    # element row sits between them), so the kernel gathers them
+    import pyarrow as pa
+
+    from filesystemagent_spark.functions.pqkernels import pair_dot
+
+    t = pa.list_(pa.float32())
+    a = pa.array([[9.0], [0.5, 2.0], [1.0, None], [3.0, -1.0]], t).slice(1)
+    b = pa.array([[9.0], [4.0, 0.25], [1.0, 2.0], [2.0, 2.0]], t).slice(1)
+    assert pair_dot(a, b).to_pylist() == [2.5, None, 4.0]
+
+
 def test_hard_example_ann_twin_agreement(spark, sf_dir):
     """Round 6: the ANN-candidate twin must agree with the exact miner
     on >=0.9 of the mined (kind, query, neighbor) set — positives are
