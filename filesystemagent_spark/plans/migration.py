@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from filesystemagent_spark.schemas import empty_frame
+
 CONFLICT_MODES = ("skip", "overwrite", "rename", "backup", "fail")
 OPERATIONS = ("copy", "move", "link", "symlink")
 
@@ -138,8 +140,7 @@ def plan_migration(
     if existing is not None:
         ex = existing.select(_strip_scheme(F.col(path_col)).alias("ex_path"))
     else:
-        spark = listing.sparkSession
-        ex = spark.createDataFrame([], "ex_path string")
+        ex = empty_frame(listing.sparkSession, "ex_path string")
     taken = ex.select(F.col("ex_path").alias("dest0"), F.lit(True).alias("dest_exists"))
 
     def family_of(path_expr_name: str):

@@ -87,7 +87,7 @@ def run_audit_pipeline(
     if frames:
         result.findings = N.union_findings(*frames)
     else:
-        from filesystemagent_spark.schemas import FINDING
+        from filesystemagent_spark.schemas import FINDING, empty_frame
 
-        result.findings = spark.createDataFrame([], FINDING)
+        result.findings = empty_frame(spark, FINDING)
     return result

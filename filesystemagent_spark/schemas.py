@@ -21,6 +21,7 @@ Reference citations:
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 # Open string-keyed metadata — the reference's Dict[str, Any] escape
@@ -33,6 +34,30 @@ def _schema(*fields: tuple[str, T.DataType] | tuple[str, T.DataType, bool]) -> T
     return T.StructType(
         [T.StructField(n, t, rest[0] if rest else True) for n, t, *rest in fields]
     )
+
+
+def ddl_schema(ddl: str) -> T.StructType:
+    """The StructType a column-list DDL (``"a int, b string"``) names,
+    from the JVM's DDL parser in one py4j call. It is the parser
+    ``createDataFrame(rows, ddl)`` applies, so the schema is the same,
+    nullability included."""
+    return T.DataType.fromDDL(ddl)
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+    """A 0-row frame of ``schema`` (a StructType or a DDL string) over an
+    empty JVM ``LocalRelation``: the schema is kept exactly, and the
+    optimizer drops the frame from unions and joins, so it adds no task.
+    ``spark.createDataFrame`` of an empty list instead wraps a Python RDD
+    of ``defaultParallelism`` empty slices, and each slice that reaches an
+    executed plan is a task that waits on a Python worker."""
+    if isinstance(schema, str):
+        schema = ddl_schema(schema)
+    jss = spark._jsparkSession
+    jdf = jss.createDataFrame(
+        spark._jvm.java.util.ArrayList(), jss.parseDataType(schema.json())
+    )
+    return DataFrame(jdf, spark)
 
 
 SEVERITIES = ("critical", "high", "medium", "low", "info")

@@ -25,10 +25,10 @@ At 100 TB the protocol is unchanged; what upgrades is the CAS
 primitive (object stores use put-if-absent / a log service instead of
 link(2)).
 
-MANIFEST SCALING (round 5): the pointer manifest no longer inlines
-every file + its stats once a commit exceeds _INLINE_FILES_MAX files —
-it spills them into immutable parquet STATS SEGMENTS and keeps only
-segment descriptors (path, n_files, per-column envelope rollup), the
+MANIFEST SCALING: the pointer manifest does not inline every file +
+its stats once a commit exceeds _INLINE_FILES_MAX files — it spills
+them into immutable parquet STATS SEGMENTS and keeps only segment
+descriptors (path, n_files, per-column envelope rollup), the
 Iceberg manifest-list shape. Planning is two-level: predicates prune
 whole segments on the envelopes, then per-file stats only inside
 surviving segments — driver memory is O(matching files), and a commit
@@ -37,7 +37,7 @@ At 10^5-10^6 files the pointer stays a few KB instead of a
 multi-hundred-MB JSON parse per read.
 
 The two fact-table-scale properties real formats add on top
-of the protocol are BOTH here as of round 4:
+of the protocol are BOTH here:
 
 - FILE-GRANULAR MERGE: `merge_into` consults the manifest's per-file
   min/max stats and rewrites ONLY the files whose key ranges may
@@ -65,6 +65,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from filesystemagent_spark.handles import HANDLES, IMMUTABLE, StampedLRU, file_stamp
+from filesystemagent_spark.schemas import ddl_schema, empty_frame
 
 
 class CommitConflict(Exception):
@@ -259,8 +260,8 @@ def _file_may_match(per: dict[str, list], pred: tuple[str, str, object]) -> bool
         if op == "in":
             if isinstance(val, _SortedVals):
                 # pre-sorted by _prep_dnf: bisect instead of scanning.
-                # Round-10 measurement (scripts/exp_probe_cap.py): the
-                # linear test cost ~10µs per (key, file) pair — 6s for
+                # Measured with scripts/exp_probe_cap.py: the linear
+                # test cost ~10µs per (key, file) pair — 6s for
                 # a 10k-key footprint over 64 files, HOURS at 10^5
                 # files; the bisect is O(log keys) per file.
                 i = bisect.bisect_left(val, mn)
@@ -331,10 +332,9 @@ def _stats_rollup(stats_list: list[dict]) -> dict[str, list]:
 # The predicate grammar shared by read(where=...), delete_where,
 # update_where, and the stats pruner — one definition so they can
 # never drift. Two accepted shapes:
-#   [(col, op, val), ...]              one CONJUNCTION (every round-5
-#                                      call site; unchanged)
+#   [(col, op, val), ...]              one CONJUNCTION
 #   [[(col, op, val), ...], [...]]     DNF — OR of conjunctions
-# (round 7): `[[("a","=",1),("b","<",2)], [("c",">",3)]]` reads as
+# e.g. `[[("a","=",1),("b","<",2)], [("c",">",3)]]` reads as
 # (a=1 AND b<2) OR c>3. Stats pruning distributes over the OR: a file
 # is skipped only when EVERY disjunct is proven empty for it.
 def _dnf(where) -> list[list]:
@@ -352,9 +352,9 @@ def _dnf(where) -> list[list]:
 
 
 # Above this size, `Column.isin(*vals)` construction dominates: py4j
-# marshals one literal per value (~0.8ms each, measured round 10 —
-# 45s to BUILD a 20k-value isin before any row is read; break-even vs
-# the ~30ms flat json path is ~64 values, scripts/exp_probe_cap.py).
+# marshals one literal per value (~0.8ms each: 45s to BUILD a
+# 20k-value isin before any row is read; break-even vs the ~30ms flat
+# json path is ~64 values, measured with scripts/exp_probe_cap.py).
 # Large lists switch to ONE json string literal parsed JVM-side
 # (from_json is constant-folded) + array_contains. Trade-off: isin
 # executes as an O(1)/row hash InSet while array_contains is
@@ -470,7 +470,7 @@ def _json_where(where) -> list[list]:
         return out
 
     dnf = [_conv(conj) for conj in _dnf(where)]
-    # single-conjunction predicates keep the flat round-5 shape, so
+    # single-conjunction predicates keep the flat conjunction shape, so
     # every existing manifest/tombstone round-trips unchanged
     return dnf[0] if len(dnf) == 1 else dnf
 
@@ -500,7 +500,7 @@ class _SortedVals(tuple):
 def _prep_dnf(where) -> list[list]:
     """Normalize a predicate ONCE per plan for the per-file stats loop:
     DNF shape, with every `in` value list deduplicated and sorted into
-    a `_SortedVals`. Round 10: the stats test used to re-normalize the
+    a `_SortedVals`. The stats test used to re-normalize the
     DNF and re-scan the full value list for EVERY file — O(keys·files)
     driver time, measured at ~10µs per pair (exp_probe_cap.py), which
     made wide in-list predicates cost seconds at 64 files and would
@@ -998,7 +998,7 @@ class TxTable:
 
         ddl = ddl or m["schema_ddl"]
         if not files:
-            return spark.createDataFrame([], ddl)
+            return empty_frame(spark, ddl)
         tbs = m.get("tombstones") or []
         if not tbs:
             return spark.read.schema(ddl).parquet(*files)
@@ -1007,7 +1007,7 @@ class TxTable:
         for f in files:
             key = tuple(i for i, s in enumerate(tb_files) if f in s)
             groups.setdefault(key, []).append(f)
-        cols = spark.createDataFrame([], ddl).columns
+        cols = ddl_schema(ddl).fieldNames()
         parts = []
         for key, fs in groups.items():
             df = spark.read.schema(ddl).parquet(*fs)
@@ -1040,7 +1040,7 @@ class TxTable:
 
         ``where`` — optional predicates, either one conjunction
         [(col, op, value), ...] or DNF [[conj], [conj], ...] = OR of
-        conjunctions (round 7), op in {=, !=, <, <=, >, >=, in, isnull, notnull} — enables
+        conjunctions, op in {=, !=, <, <=, >, >=, in, isnull, notnull} — enables
         STATS-BASED FILE SKIPPING: files whose manifest min/max stats
         prove no matching row are dropped from the scan before Spark
         ever plans it (the Iceberg/Delta data-skipping recipe; Spark's
@@ -1070,7 +1070,7 @@ class TxTable:
             if tbs:
                 df = self._apply_tombstones(spark, m, files)
             elif not files:
-                df = spark.createDataFrame([], m["schema_ddl"])
+                df = empty_frame(spark, m["schema_ddl"])
             else:
                 df = _scan_files(spark, m["schema_ddl"], files)
             df = df.filter(_where_cond(where))
@@ -1085,7 +1085,7 @@ class TxTable:
         # dir-grouped: bounded driver cost, listing distributed
         files = self._plan_scan_paths(m)
         if not files:
-            return spark.createDataFrame([], m["schema_ddl"])
+            return empty_frame(spark, m["schema_ddl"])
         return _scan_files(spark, m["schema_ddl"], files)
 
     # -- write path --------------------------------------------------
@@ -1516,12 +1516,12 @@ class TxTable:
                     "carried": self._manifest_n_files(m), "rebased": False,
                 }
                 return base
-            ddl = self._evolved_ddl(spark, m["schema_ddl"], updates)
+            ddl = self._evolved_ddl(m["schema_ddl"], updates)
             touched, carried, carried_stats, reused, _ = self._split_files(
                 m, lambda per: _file_overlaps_probe(per, probe)
             )
             n_carried = len(carried) + sum(s["n_files"] for s in reused)
-            cols = spark.createDataFrame([], ddl).columns
+            cols = ddl_schema(ddl).fieldNames()
             # carried/touched files may predate newly-added columns:
             # the parquet reader fills schema columns missing from a
             # file with nulls, so reading with the EVOLVED schema is
@@ -1538,14 +1538,14 @@ class TxTable:
                 # serve BOTH as the 'upsert' change images and as the
                 # batch's data files (the sharing update_where(mode='mor')
                 # already does; exact images with no read-time diffing).
-                # Round 5 adds UPDATE PRE-IMAGES (the old rows whose keys
+                # It also stages UPDATE PRE-IMAGES (the old rows whose keys
                 # the batch replaces, Delta's update_preimage): without
                 # them an incremental consumer cannot maintain subtractive
                 # state (SUM/COUNT deltas need the value being replaced).
                 # Files not in `touched` provably hold no update key, so
                 # the key-matched rows of the touched scan ARE the
                 # complete pre-image set.
-                batch_aligned = spark.createDataFrame([], ddl).unionByName(
+                batch_aligned = empty_frame(spark, ddl).unionByName(
                     updates, allowMissingColumns=True
                 ).select(*cols)
                 if touched:
@@ -1606,7 +1606,7 @@ class TxTable:
                         updates, allowMissingColumns=True
                     ).select(*cols)
                 else:
-                    one_sided = spark.createDataFrame([], ddl).unionByName(
+                    one_sided = empty_frame(spark, ddl).unionByName(
                         updates, allowMissingColumns=True
                     )
                     merged = one_sided.select(*cols)
@@ -1664,7 +1664,7 @@ class TxTable:
         keeping their non-matching rows; every other file carries
         forward verbatim (stats included).
 
-        ``mode='mor'`` (merge-on-read, round 6 — Iceberg-v2 /
+        ``mode='mor'`` (merge-on-read, the Iceberg-v2 /
         deletion-vector shape): rewrite NOTHING. The commit records a
         TOMBSTONE {predicate, explicit stats-pruned file list}; readers
         apply it as an anti-filter on exactly those files
@@ -1911,7 +1911,7 @@ class TxTable:
                 scan = self._apply_tombstones(spark, m, touched)
                 # USING semi/anti joins move the join keys to the
                 # front; staged files must keep schema_ddl order
-                cols = spark.createDataFrame([], m["schema_ddl"]).columns
+                cols = ddl_schema(m["schema_ddl"]).fieldNames()
             if change_feed and mode == "cow":
                 # ONE scan of the touched files: keyed rows are the
                 # delete images, the rest are the rewritten data files
@@ -2042,7 +2042,7 @@ class TxTable:
             if base == 0:
                 raise ValueError(f"table {self.path} has no committed snapshot")
             m = self._read_manifest(base)
-            schema = spark.createDataFrame([], m["schema_ddl"]).schema
+            schema = ddl_schema(m["schema_ddl"])
             cols = [f.name for f in schema]
             types = {f.name: f.dataType for f in schema}
             unknown = sorted(set(set_exprs) - set(cols))
@@ -2100,7 +2100,7 @@ class TxTable:
                 pre_df = (
                     spark.read.schema(m["schema_ddl"]).parquet(*pre_files)
                     if pre_files
-                    else spark.createDataFrame([], m["schema_ddl"])
+                    else empty_frame(spark, m["schema_ddl"])
                 )
                 post_files, _ = self._write_data(_post_select(pre_df))
                 changes = {
@@ -2400,9 +2400,9 @@ class TxTable:
         with no logical change (layout-only compaction), and raises for
         a version committed without the feed — a gap an incremental
         consumer must never skip silently. Version 1 (init) is its own
-        insert image. Pre-round-5 single-part manifests ({'files',
-        'type'}) normalize to a one-part list, so old tables replay
-        unchanged."""
+        insert image. Single-part manifests from before update
+        pre-images ({'files', 'type'}) normalize to a one-part list, so
+        old tables replay unchanged."""
         m = self._read_manifest(version)
         ch = m.get("changes")
         if ch is None:
@@ -2448,6 +2448,13 @@ class TxTable:
         change."""
         from pyspark.sql import functions as F
 
+        def tagged(df: DataFrame, change_type: str, v: int) -> DataFrame:
+            # one projection (one re-analysis) for both columns
+            return df.withColumns({
+                "_change_type": F.lit(change_type),
+                "_commit_version": F.lit(v).cast("long"),
+            })
+
         to_v = self.latest_version() if to_version is None else to_version
         latest_ddl = self._read_manifest(to_v)["schema_ddl"]
         out = None
@@ -2458,26 +2465,20 @@ class TxTable:
             for ch in parts:
                 if not ch["files"]:
                     continue
-                df = (
-                    spark.read.schema(ch["schema_ddl"])
-                    .parquet(*ch["files"])
-                    .withColumn("_change_type", F.lit(ch["type"]))
-                    .withColumn("_commit_version", F.lit(v).cast("long"))
+                df = tagged(
+                    spark.read.schema(ch["schema_ddl"]).parquet(*ch["files"]),
+                    ch["type"], v,
                 )
                 out = (
                     df if out is None
                     else out.unionByName(df, allowMissingColumns=True)
                 )
         if out is None:
-            out = (
-                spark.createDataFrame([], latest_ddl)
-                .withColumn("_change_type", F.lit(""))
-                .withColumn("_commit_version", F.lit(0).cast("long"))
-            )
+            out = tagged(empty_frame(spark, latest_ddl), "", 0)
         return out
 
     @staticmethod
-    def _evolved_ddl(spark: SparkSession, ddl: str, updates: DataFrame) -> str:
+    def _evolved_ddl(ddl: str, updates: DataFrame) -> str:
         """SCHEMA EVOLUTION (Delta mergeSchema semantics): update
         columns unknown to the table are APPENDED to the schema; rows
         in files written before the column existed read as null (the
@@ -2486,7 +2487,7 @@ class TxTable:
         — silent coercion corrupts; evolve types by explicit cast in
         the update batch."""
         cur = {f.name: f.dataType.simpleString()
-               for f in spark.createDataFrame([], ddl).schema.fields}
+               for f in ddl_schema(ddl).fields}
         added = []
         for f in updates.schema.fields:
             t = f.dataType.simpleString()
@@ -2722,7 +2723,7 @@ class TxTable:
             # commits and invalidates every concurrent merge's base
             # snapshot (measured: a 0.5s-paced compact loop starved 6
             # DML writers into 100-retry aborts before this guard;
-            # SCALE.md round-8 contention table). The guard fires only
+            # SCALE.md's contention table). The guard fires only
             # when the HEAD is itself a compaction product — the loop
             # shape — so a compact issued after any DML still commits
             # (several callers rely on that version bump): file count

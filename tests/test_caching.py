@@ -194,6 +194,37 @@ def test_queries_persist_only_through_track_persist():
     assert offenders == []
 
 
+def test_no_module_builds_an_empty_frame_over_python():
+    """No engine module calls ``createDataFrame`` on an empty list
+    literal. That frame is a Python RDD of ``defaultParallelism`` empty
+    slices, and each slice that reaches an executed plan waits on a
+    Python worker; ``schemas.empty_frame`` builds it on the JVM."""
+    import ast
+    import pathlib
+
+    import filesystemagent_spark as fsa
+
+    def empty_list(node):
+        return isinstance(node, ast.List) and not node.elts
+
+    offenders = []
+    root = pathlib.Path(fsa.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and (
+                    (node.args and empty_list(node.args[0]))
+                    or any(k.arg == "data" and empty_list(k.value)
+                           for k in node.keywords)
+                )
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert offenders == []
+
+
 def test_staging_dirs_follow_scope_and_release_rules(tmp_path, monkeypatch):
     """A staging dir lives until its tracked_scope() exits or the
     registry is drained, and removing one already gone is a no-op (a

@@ -50,6 +50,9 @@ def test_plan_preserves_structure_and_is_dry(spark, src_tree, tmp_path):
     assert rows[str(src_tree / "sub/deep/c.bin")].dest == str(dest / "sub/deep/c.bin")
     assert all(r.action == "copy" and r.reason == "new" for r in rows.values())
     assert not os.path.exists(dest)  # planning touched nothing
+    # with no destination listing the plan joins an empty JVM frame,
+    # not a Python RDD of empty slices
+    assert "LogicalRDD" not in plan._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_flatten_mode_uses_basenames(spark, src_tree, tmp_path):

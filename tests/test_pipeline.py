@@ -10,6 +10,7 @@ import pytest
 
 from filesystemagent_spark.plans.pipeline import run_audit_pipeline
 from filesystemagent_spark.plans.reporting import html_report
+from filesystemagent_spark.schemas import FINDING
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 
@@ -53,6 +54,9 @@ def test_missing_sources_skipped(spark, tmp_path):
     assert len(res.sources_skipped) == 8
     assert res.findings.count() == 0  # empty frame with the full schema
     assert "severity" in res.findings.columns
+    assert res.findings.schema == FINDING  # nullability included
+    plan = res.findings._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan  # no Python RDD behind it
 
 
 def test_report_renders_from_pipeline(result):

@@ -3419,3 +3419,91 @@ def test_app_metadata_memo_survives_drop_and_recreate(spark, tmp_path):
     assert t.latest_version() == 1
     assert t.latest_app_value("batch_id") == 8
     assert t.latest_app_values(("batch_id",)) == {"batch_id": 8}
+
+
+def _assert_jvm_empty(df, expected_schema):
+    """`df` is an empty frame with no Python RDD behind it: no
+    LogicalRDD in its optimized plan, 0 rows, and exactly the schema
+    (nullability included) the Python-backed empty frame had."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan, plan
+    assert df.collect() == []
+    assert df.schema == expected_schema
+
+
+def test_pruned_read_returns_a_jvm_empty_frame(spark, tmp_path):
+    t = TxTable(str(tmp_path / "tbl"))
+    t.init(_df(spark, [("/a", 1), ("/b", 2)]))
+    old = spark.createDataFrame([], "file_path string, size bigint")
+    # stats prove no file holds a size > 100: no file is scanned
+    _assert_jvm_empty(t.read(spark, where=[("size", ">", 100)]), old.schema)
+
+
+def test_table_changes_without_change_files_is_a_jvm_empty_frame(spark, tmp_path):
+    t = TxTable(str(tmp_path / "tbl"))
+    t.init(_df(spark, [("/a", 1)]))
+    t.commit_app({"batch_id": 1})  # v2: metadata only, no change images
+    old = (
+        spark.createDataFrame([], "file_path string, size bigint")
+        .withColumn("_change_type", F.lit(""))
+        .withColumn("_commit_version", F.lit(0).cast("long"))
+    )
+    _assert_jvm_empty(t.table_changes(spark, 2), old.schema)
+
+
+def test_update_without_pre_images_stages_a_jvm_empty_frame(
+    spark, tmp_path, monkeypatch
+):
+    """size=2 lies inside the file's [1, 3] stats range, so the file is
+    touched, but no row matches: the post-image write gets the empty
+    pre-image frame."""
+    t = TxTable(str(tmp_path / "tbl"))
+    t.init(_df(spark, [("/a", 1), ("/b", 3)]).coalesce(1))
+    written = []
+    real = TxTable._write_data
+
+    def spy(self, df):
+        written.append(df)
+        return real(self, df)
+
+    monkeypatch.setattr(TxTable, "_write_data", spy)
+    t.update_where(spark, [("size", "=", 2)], {"size": "size + 1"},
+                   change_feed=True)
+    old = spark.createDataFrame([], "file_path string, size bigint")
+    assert len(written) == 1  # the post-images of no pre-image rows
+    _assert_jvm_empty(written[0], old.schema)
+    assert t.table_changes(spark, 2).count() == 0
+
+
+def test_change_feed_merge_stages_no_empty_tasks(spark, tmp_path, monkeypatch):
+    """The change-feed merge's one staging write reads the touched file
+    and the update batch, so it runs 2 tasks; an aligned batch built
+    over a Python RDD added ``defaultParallelism`` empty ones."""
+    t = TxTable(str(tmp_path / "tbl"))
+    t.init(spark.sql("SELECT '/a' AS file_path, 1L AS size"))
+    sc = spark.sparkContext
+    group = f"stage-{tmp_path.name}"
+    real = TxTable._write_data_parts
+
+    def in_group(self, *args, **kwargs):
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            return real(self, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    monkeypatch.setattr(TxTable, "_write_data_parts", in_group)
+    updates = spark.sql("SELECT '/a' AS file_path, 10L AS size")
+    assert t.merge_into(updates, ["file_path"], change_feed=True) == 2
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert jobs
+    # the key-distinct stage runs as its own 1-task job, the write as
+    # one job of 2 tasks (the touched file and the batch)
+    per_job = [
+        sum(tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds)
+        for j in jobs
+    ]
+    assert max(per_job) <= 2, per_job
+    assert {r.size for r in t.read(spark).collect()} == {10}
