@@ -22,6 +22,8 @@ import sys
 
 from pyspark.sql import functions as F
 
+from filesystemagent_spark.caching import track_persist, tracked_scope
+
 
 def _spark(app: str):
     from filesystemagent_spark.session import get_spark
@@ -101,16 +103,16 @@ def cmd_find_duplicates(args: argparse.Namespace) -> int:
         & ~F.col("is_directory")
         & (F.col("file_size") >= args.min_size)
     )
-    dups = duplicate_groups(
-        cat, ["file_hash", "hash_algorithm", "file_size"], "file_path"
-    ).orderBy(F.col("file_size").desc(), "file_hash").persist()
-    try:
+    with tracked_scope():
+        dups = track_persist(
+            duplicate_groups(
+                cat, ["file_hash", "hash_algorithm", "file_size"], "file_path"
+            ).orderBy(F.col("file_size").desc(), "file_hash")
+        )
         dups.show(args.limit, truncate=80)
         print(f"{dups.count()} duplicate group(s)")
         if args.out:
             dups.write.mode("overwrite").json(args.out)
-    finally:
-        dups.unpersist()
     return 0
 
 
@@ -143,8 +145,8 @@ def cmd_migrate(args: argparse.Namespace) -> int:
         conflict=args.conflict,
         existing=existing,
     )
-    plan = plan.persist()  # show + count + execute share one compute
-    try:
+    with tracked_scope():
+        plan = track_persist(plan)  # show + count + execute share one compute
         if not args.execute:
             plan.orderBy("src").show(args.limit, truncate=60)
             print(f"dry run: {plan.count()} planned action(s); pass --execute to run")
@@ -168,8 +170,6 @@ def cmd_migrate(args: argparse.Namespace) -> int:
                 else:
                     print(f"verify: all {n_copies} copies hash-match")
         return rc
-    finally:
-        plan.unpersist()
 
 
 def cmd_query(args: argparse.Namespace) -> int:

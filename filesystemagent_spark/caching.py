@@ -1,4 +1,4 @@
-"""Owner of operator-internal persisted DataFrames.
+"""The one owner of persisted DataFrames and scratch directories.
 
 Several operators materialize a derived sketch before a self-join
 (minhash/simhash/Hamming bands, LSH buckets, inverted indexes, oriented
@@ -8,16 +8,30 @@ caller never sees these DataFrames and can't unpersist them, so
 repeated operator calls in one long-lived session would accumulate
 MEMORY_AND_DISK cache entries until executor storage evicts them.
 
-``track_persist`` is the one persist call sites use. It registers each
-persisted frame in a process-wide registry and in the innermost
-``tracked_scope()`` of the calling thread (a ``ContextVar``). Leaving a
-scope unpersists that scope's frames only, so a unit of work (a feed
-sink's micro-batch) drops its own intermediates while a concurrent
-query on the same session keeps its. ``release_tracked_caches()``
-drains the whole registry; hosts that run one unit of work at a time
-(a notebook between stages, ``perfbench/run.py`` and
-``scripts/driver_sim.py`` between queries) call it in between. Callers that never release still work:
-they just hold warm caches until storage pressure evicts them.
+The rules every engine module follows:
+
+- Persist only through ``track_persist``; no other module calls
+  ``.cache()``, ``.persist()`` or ``.unpersist()`` (the one exception
+  is the per-round ``localCheckpoint`` release in ``operators/bpe.py``,
+  which truncates lineage and must free each round's frame at once).
+- A frame whose plan is already cached is the caller's: it is used
+  as-is, never re-persisted and never released here. Spark's
+  ``unpersist`` drops the cached *plan*, whoever persisted it, so a
+  callee that released it would drop the caller's cache.
+- Release happens by scope. ``track_persist`` registers each frame in
+  a process-wide registry and in the innermost ``tracked_scope()`` of
+  the calling thread (a ``ContextVar``). Leaving a scope unpersists
+  that scope's frames only, so a unit of work drops its own
+  intermediates while a concurrent query on the same session keeps
+  its. A function that must free what it persisted before it returns
+  runs inside its own scope, and every streaming sink micro-batch is a
+  scope (``streaming/sinks.py``).
+- A query that returns a lazy DataFrame reading its persisted frames
+  leaves them registered: ``release_tracked_caches()`` drains the whole
+  registry, and hosts that run one unit of work at a time (a notebook
+  between stages, ``perfbench/run.py`` and ``scripts/driver_sim.py``
+  between queries) call it in between. Callers that never release still
+  work: they just hold warm caches until storage pressure evicts them.
 
 ``staging_dir`` is the one way a query makes a scratch directory (TxTable
 files, stream checkpoints and sources) that its returned, still lazy
@@ -55,7 +69,13 @@ def _track(item: DataFrame | str) -> None:
 def track_persist(
     df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
 ) -> DataFrame:
-    """``df.persist(level)``, registered for later release."""
+    """``df.persist(level)``, registered for release by the innermost
+    ``tracked_scope()`` or by ``release_tracked_caches()``. A frame whose
+    plan is already cached (the caller persisted it, or an enclosing
+    unit of work did) is returned as-is and not tracked: releasing it
+    here would drop a cache its owner still relies on."""
+    if df.storageLevel != StorageLevel.NONE:
+        return df
     persisted = df.persist(level)
     _track(persisted)
     return persisted

@@ -1,4 +1,4 @@
-"""Target-recall ANN tuning (round 7, verdict item 6).
+"""Target-recall ANN tuning.
 
 The registered LSH/IVF defaults are the right 100 TB shape for
 clustered corpora but measured 0.38–0.49 recall@10 at sf0.1 on the
@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from filesystemagent_spark.caching import track_persist
+from filesystemagent_spark.caching import track_persist, tracked_scope
 from filesystemagent_spark.operators.similarity import (
     knn_bruteforce,
     knn_ivf,
@@ -85,9 +85,9 @@ def tune_knn_lsh(
     """Pick (n_planes, n_tables) meeting ``target_recall`` on a sampled
     recall estimate. Returns {n_planes, n_tables, recall_estimate,
     met_target, curve} — curve records every rung tried."""
-    sample = track_persist(_sample(queries, id_col, sample_queries))
-    corpus = track_persist(corpus)
-    try:
+    with tracked_scope():
+        sample = track_persist(_sample(queries, id_col, sample_queries))
+        corpus = track_persist(corpus)
         exact = _topk_sets(
             knn_bruteforce(sample, corpus, id_col=id_col, vec_col=vec_col, k=k)
         )
@@ -119,11 +119,6 @@ def tune_knn_lsh(
             "recall_estimate": best["recall"], "met_target": False,
             "curve": curve,
         }
-    finally:
-        # release BOTH tuning caches — leaving the corpus pinned would
-        # hold a corpus-sized cache until the session-wide release hook
-        sample.unpersist()
-        corpus.unpersist()
 
 
 def tune_knn_ivf(
@@ -143,9 +138,9 @@ def tune_knn_ivf(
     terminates with met_target=True (worst case: the exact plan, the
     honest answer on structureless data)."""
     n_cells = centroids.count()
-    sample = track_persist(_sample(queries, id_col, sample_queries))
-    corpus = track_persist(corpus)
-    try:
+    with tracked_scope():
+        sample = track_persist(_sample(queries, id_col, sample_queries))
+        corpus = track_persist(corpus)
         exact = _topk_sets(
             knn_bruteforce(sample, corpus, id_col=id_col, vec_col=vec_col, k=k)
         )
@@ -170,9 +165,6 @@ def tune_knn_ivf(
                     "met_target": r >= target_recall, "curve": curve,
                 }
             nprobe = min(n_cells, nprobe * 2)
-    finally:
-        sample.unpersist()
-        corpus.unpersist()
 
 
 def tune_knn_pq(
@@ -190,20 +182,20 @@ def tune_knn_pq(
     target_recall: float = 0.8,
     sample_queries: int = 10,
 ) -> dict:
-    """Pick the RERANK depth meeting ``target_recall`` (round 8 —
-    completes the tuner family): PQ's recall limiter is ADC
-    quantization error, and the standard fix is exact re-scoring of a
-    deeper candidate list (operators/similarity.knn_pq_rerank). The
-    ladder doubles rerank from 2k up to the corpus size, where ADC
-    retrieves everything and the exact rescore makes recall 1.0 — so
-    like the IVF tuner this one ALWAYS terminates met (worst case:
-    the exact plan over compressed candidates)."""
+    """Pick the RERANK depth meeting ``target_recall``: PQ's recall
+    limiter is ADC quantization error, and the standard fix is exact
+    re-scoring of a deeper candidate list
+    (operators/similarity.knn_pq_rerank). The ladder doubles rerank
+    from 2k up to the corpus size, where ADC retrieves everything and
+    the exact rescore makes recall 1.0 — so like the IVF tuner this
+    one ALWAYS terminates met (worst case: the exact plan over
+    compressed candidates)."""
     from filesystemagent_spark.operators.similarity import knn_pq_rerank
 
     n_corpus = corpus.count()
-    sample = track_persist(_sample(queries, id_col, sample_queries))
-    corpus = track_persist(corpus)
-    try:
+    with tracked_scope():
+        sample = track_persist(_sample(queries, id_col, sample_queries))
+        corpus = track_persist(corpus)
         exact = _topk_sets(
             knn_bruteforce(sample, corpus, id_col=id_col, vec_col=vec_col, k=k)
         )
@@ -228,9 +220,6 @@ def tune_knn_pq(
                     "met_target": r >= target_recall, "curve": curve,
                 }
             rerank = min(n_corpus, rerank * 2)
-    finally:
-        sample.unpersist()
-        corpus.unpersist()
 
 
 def knn_pq_auto(
@@ -325,9 +314,8 @@ def knn_stored_ivf_auto(
     target_recall: float = 0.8,
     sample_queries: int = 10,
 ) -> tuple[DataFrame, dict]:
-    """IVF auto-tune AGAINST THE STORED INDEX (round 9 — closes the
-    asymmetry where the auto paths existed only in-memory while the
-    stored path served a static nprobe=2 measured at 0.38 recall@10):
+    """IVF auto-tune AGAINST THE STORED INDEX (a static nprobe=2 on
+    the stored path measured 0.38 recall@10):
     the tuner's exact baseline and every ladder rung read the stored
     cells table (its rows carry the vectors, so the corpus is never
     re-read or re-assigned), and the final serve goes through the
@@ -349,20 +337,18 @@ def knn_stored_ivf_auto(
 
     # a mid-retrain index (centroids epoch ahead of cells) would tune
     # AND serve new centroids against old assignments — refuse like
-    # every other consumer path does (round-10 advice)
+    # every other consumer path does
     _check_ivf_epochs(index_dir)
     centroids = TxTable(_os.path.join(index_dir, "centroids")).read(spark)
     cells_path = _os.path.join(index_dir, "cells")
-    cells = track_persist(TxTable(cells_path).read(spark))
-    try:
+    with tracked_scope():
+        cells = track_persist(TxTable(cells_path).read(spark))
         meta = tune_knn_ivf(
             queries, cells.select(id_col, vec_col), centroids,
             id_col=id_col, vec_col=vec_col, k=k,
             target_recall=target_recall, sample_queries=sample_queries,
             corpus_cells=cells,
         )
-    finally:
-        cells.unpersist()
     out = knn_ivf(
         queries, None, centroids, id_col=id_col, vec_col=vec_col,
         k=k, nprobe=meta["nprobe"],
@@ -389,7 +375,7 @@ def knn_stored_ivfpq_auto(
     target_recall: float = 0.8,
     sample_queries: int = 10,
 ) -> tuple[DataFrame, dict]:
-    """IVFPQ auto-tune against the STORED composed index (round 10):
+    """IVFPQ auto-tune against the STORED composed index:
     walk (nprobe, rerank) together — each rung doubles both the probe
     width (candidate coverage: IVF's recall limiter) and the exact-
     rescore depth (quantization error: PQ's recall limiter) — until
@@ -411,10 +397,10 @@ def knn_stored_ivfpq_auto(
     n_cells = TxTable(_os.path.join(index_dir, "centroids")).read(
         spark
     ).count()
-    corpus = track_persist(TxTable(corpus_table).read(spark))
-    n_corpus = corpus.count()
-    sample = track_persist(_sample(queries, id_col, sample_queries))
-    try:
+    with tracked_scope():
+        corpus = track_persist(TxTable(corpus_table).read(spark))
+        n_corpus = corpus.count()
+        sample = track_persist(_sample(queries, id_col, sample_queries))
         exact = _topk_sets(
             knn_bruteforce(
                 sample, corpus, id_col=id_col, vec_col=vec_col, k=k
@@ -445,9 +431,6 @@ def knn_stored_ivfpq_auto(
                 break
             nprobe = min(n_cells, nprobe * 2)
             rerank = min(n_corpus, rerank * 2)
-    finally:
-        sample.unpersist()
-        corpus.unpersist()
     out = knn_ivfpq(
         spark, queries, index_dir, corpus_table=corpus_table,
         id_col=id_col, vec_col=vec_col, dim=dim, m=m, k_cells=k_cells,

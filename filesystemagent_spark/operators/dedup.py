@@ -493,7 +493,7 @@ def start_minhash_index_sink(
     maintain_retention_seconds: float = 600.0,
 ):
     """INCREMENTAL LSH band-index maintenance from the document
-    corpus's CHANGE FEED (round 9) — the dedup leg of the
+    corpus's CHANGE FEED — the dedup leg of the
     maintained-artifact family (join views: streaming/sinks; lexical
     index: invindex.start_bm25_index_sink; vector index:
     similarity.start_ivf_index_sink; this). The corpus lives in a
@@ -526,35 +526,28 @@ def start_minhash_index_sink(
         applied = t.latest_app_value(STAMP)
         if applied is not None and applied >= batch_id:
             return  # replayed batch
-        # the signature pipeline track-persists two intermediates per
-        # call; a continuous sink must release ITS OWN per batch or a
-        # long-lived drain accumulates them for the session's lifetime
-        with tracked_scope():
-            imgs, latest, _ = _batch_images(batch_df, id_col)
-            try:
-                if latest.isEmpty():
-                    return  # empty batch: idempotent no-op, unstamped
-                post = latest.filter(
-                    F.col("_change_type").isin("insert", "upsert")
-                ).select(id_col, text_col)
-                new_rows = minhash_band_index(
-                    post, id_col, text_col,
-                    shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
-                    max_bucket=None, seed=seed, base=base, band_key=band_key,
-                ).repartitionByRange(8, "band", "band_hash")
-                # a post-image doc with EMPTY shingles contributes zero
-                # rows — has_new comes from new_rows (not post), so the
-                # delete still retires an emptied doc's old slice
-                _apply_index_batch(
-                    t, spark, batch_id=batch_id, stamp_key=STAMP,
-                    latest=latest, id_col=id_col, new_rows=new_rows,
-                    merge_keys=[id_col, "band"],
-                    fold_depth=fold_depth, fold_covered_frac=fold_covered_frac,
-                    maintain_every=maintain_every,
-                    maintain_retention_seconds=maintain_retention_seconds,
-                )
-            finally:
-                imgs.unpersist()
+        latest = _batch_images(batch_df, id_col)[1]
+        if latest.isEmpty():
+            return  # empty batch: idempotent no-op, unstamped
+        post = latest.filter(
+            F.col("_change_type").isin("insert", "upsert")
+        ).select(id_col, text_col)
+        new_rows = minhash_band_index(
+            post, id_col, text_col,
+            shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
+            max_bucket=None, seed=seed, base=base, band_key=band_key,
+        ).repartitionByRange(8, "band", "band_hash")
+        # a post-image doc with EMPTY shingles contributes zero rows —
+        # has_new comes from new_rows (not post), so the delete still
+        # retires an emptied doc's old slice
+        _apply_index_batch(
+            t, spark, batch_id=batch_id, stamp_key=STAMP,
+            latest=latest, id_col=id_col, new_rows=new_rows,
+            merge_keys=[id_col, "band"],
+            fold_depth=fold_depth, fold_covered_frac=fold_covered_frac,
+            maintain_every=maintain_every,
+            maintain_retention_seconds=maintain_retention_seconds,
+        )
 
     return _start_feed_sink(
         spark, source_table, checkpoint, apply_batch,
@@ -728,8 +721,8 @@ def minhash_dedup_against_stored_index(
     O(batch·bands) buckets of a 10^5-file index and scan cost follows
     the batch, not the index (files-read-gated in tests).
 
-    Footprints above `probe_cap` keys take the MIDDLE RUNG (round 10 —
-    was a full-read cliff): one `band = b AND band_hash BETWEEN
+    Footprints above `probe_cap` keys take the MIDDLE RUNG (not a full
+    read): one `band = b AND band_hash BETWEEN
     min..max` conjunction per band (≤ `bands` of them, the
     `_post_key_prune` in-list-when-narrow/range-when-wide discipline)
     — predicate cost stays O(bands) no matter how wide the batch, and
@@ -742,7 +735,7 @@ def minhash_dedup_against_stored_index(
     the in-list rung's resolve cost used to grow linearly with the
     footprint — 6.3s at a 10k-key footprint over just 64 files, 56s
     at 77k — split between O(keys·files) manifest-stats scans and
-    per-value py4j isin literals. Round 10 fixed both in TxTable
+    per-value py4j isin literals. TxTable now avoids both
     (`_prep_dnf` bisect stats test; json-literal membership above 64
     values), flattening resolve to ~0.5s at ANY footprint; what
     remains above `probe_cap` is the predicate's O(footprint) row
@@ -989,54 +982,57 @@ def near_dup_clusters(
     filter to groups of >= 2 for the reference's 'groups with actual
     duplicates'.
     """
-    edges = track_persist(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    )
-    labels = ids.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("cluster_id")
-    ).localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        # (1) neighbor min: for each node, the smallest label adjacent
-        neighbor = (
-            edges.join(labels.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("cluster_id").alias("nbr_min"))
+    with tracked_scope():
+        edges = track_persist(
+            pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+            .unionByName(
+                pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+            )
         )
-        stepped = labels.join(neighbor, "id", "left").select(
-            "id",
-            F.least(
-                F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
-            ).alias("cluster_id"),
-        )
-        # (2) pointer jump: my label is a node id; adopt that node's
-        # (possibly smaller) label — halves remaining distance to the
-        # component minimum each round
-        parents = stepped.select(
-            F.col("id").alias("cluster_id"), F.col("cluster_id").alias("_parent")
-        )
-        updated = (
-            stepped.join(parents, "cluster_id", "left")
-            .select(
+        labels = ids.select(
+            F.col(id_col).alias("id"), F.col(id_col).alias("cluster_id")
+        ).localCheckpoint(eager=True)
+        for _ in range(max_iter):
+            # (1) neighbor min: for each node, the smallest label adjacent
+            neighbor = (
+                edges.join(labels.withColumnRenamed("id", "src"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min("cluster_id").alias("nbr_min"))
+            )
+            stepped = labels.join(neighbor, "id", "left").select(
                 "id",
                 F.least(
                     F.col("cluster_id"),
-                    F.coalesce(F.col("_parent"), F.col("cluster_id")),
+                    F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
                 ).alias("cluster_id"),
             )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            updated.alias("u")
-            .join(labels.alias("p"), "id")
-            .filter(F.col("u.cluster_id") != F.col("p.cluster_id"))
-            .limit(1)
-            .count()
-        )
-        labels = updated
-        if changed == 0:
-            break
-    edges.unpersist()
+            # (2) pointer jump: my label is a node id; adopt that node's
+            # (possibly smaller) label — halves remaining distance to the
+            # component minimum each round
+            parents = stepped.select(
+                F.col("id").alias("cluster_id"), F.col("cluster_id").alias("_parent")
+            )
+            updated = (
+                stepped.join(parents, "cluster_id", "left")
+                .select(
+                    "id",
+                    F.least(
+                        F.col("cluster_id"),
+                        F.coalesce(F.col("_parent"), F.col("cluster_id")),
+                    ).alias("cluster_id"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            changed = (
+                updated.alias("u")
+                .join(labels.alias("p"), "id")
+                .filter(F.col("u.cluster_id") != F.col("p.cluster_id"))
+                .limit(1)
+                .count()
+            )
+            labels = updated
+            if changed == 0:
+                break
     return labels
 
 

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from filesystemagent_spark.caching import track_persist, tracked_scope
+
 
 def copurchase_edges(
     lineitem: DataFrame,
@@ -41,7 +43,7 @@ def copurchase_edges(
     table. Returns distinct directed edges (both directions), so every
     node of the graph has out-degree >= 1.
     """
-    # ONE shuffle, not two (round 11, guide §2.4): collect_set dedups
+    # ONE shuffle, not two (guide §2.4): collect_set dedups
     # per order INSIDE the aggregation, so the standalone
     # `.distinct()` pre-pass — a full extra exchange of the fact
     # table's (order, item) pairs — is gone. Per-order sets equal
@@ -87,57 +89,55 @@ def pagerank_int(
     `copurchase_edges` guarantees. Returns (node, rank) with rank in
     micro-units.
     """
-    from pyspark import StorageLevel
-
     teleport = (100 - damping_pct) * scale // 100
-    # Degree via aggregation + join, not repartition + window (round
-    # 11, guide §2.4/§2.3): the window path shuffled the FULL edge
-    # list on src just to count per-src rows; the aggregation shuffles
+    # Degree via aggregation + join, not repartition + window (guide
+    # §2.4/§2.3): the window path shuffled the FULL edge list on src
+    # just to count per-src rows; the aggregation shuffles
     # only map-side partial counts (node-cardinality), and the count
     # table re-attaches by the same join strategy the iterations use —
     # broadcast when the node table fits (the default here), a
     # partitioned join otherwise. Persisted: every iteration probes
     # this table, and without the cache each round would re-derive the
     # whole edge build. AQE right-sizes the persisted partitioning at
-    # runtime (canChangeCachedPlanOutputPartitioning, round 10).
+    # runtime (canChangeCachedPlanOutputPartitioning).
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     dside = F.broadcast(deg) if broadcast_ranks else deg
-    ed = edges.join(dside, "src").persist(StorageLevel.MEMORY_AND_DISK)
     # Eager localCheckpoint per round: iterative DataFrame algorithms
     # must truncate lineage (the plan doubles every round otherwise),
-    # and the final ranks must not reference `ed` so it can be
-    # unpersisted before returning a still-lazy result. On a cluster
+    # and the final ranks must not reference `ed` so its scope can
+    # release it before returning a still-lazy result. On a cluster
     # with an HDFS checkpoint dir, checkpoint() adds executor-loss
     # resilience (same note as dedup.near_dup_clusters).
-    # rank_0 comes from the degree table — already one row per src —
-    # instead of a THIRD full-edge exchange for distinct(src).
-    ranks = (
-        deg.select(F.col("src").alias("node"))
-        .withColumn("rank", F.lit(scale).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(iterations):
-        # The rank table is node-cardinality — orders of magnitude
-        # smaller than the edge list — so broadcasting it makes each
-        # iteration's contribution pass a map-side hash join over the
-        # PERSISTED edges: the only shuffle per round is the dst
-        # aggregation. (At web-graph scale where even the node table
-        # exceeds broadcast limits, pass broadcast_ranks=False to fall
-        # back to the partitioned join.)
-        rside = F.broadcast(ranks) if broadcast_ranks else ranks
-        contribs = ed.join(
-            rside, ed["src"] == rside["node"]
-        ).select(F.col("dst"), F.expr("rank div deg").alias("c"))
+    with tracked_scope():
+        ed = track_persist(edges.join(dside, "src"))
+        # rank_0 comes from the degree table — already one row per src
+        # — instead of a THIRD full-edge exchange for distinct(src).
         ranks = (
-            contribs.groupBy(F.col("dst").alias("node"))
-            .agg(
-                (F.lit(teleport) + F.expr(f"({damping_pct} * sum(c)) div 100"))
-                .cast("long")
-                .alias("rank")
-            )
+            deg.select(F.col("src").alias("node"))
+            .withColumn("rank", F.lit(scale).cast("long"))
             .localCheckpoint(eager=True)
         )
-    ed.unpersist()
+        for _ in range(iterations):
+            # The rank table is node-cardinality — orders of magnitude
+            # smaller than the edge list — so broadcasting it makes each
+            # iteration's contribution pass a map-side hash join over the
+            # PERSISTED edges: the only shuffle per round is the dst
+            # aggregation. (At web-graph scale where even the node table
+            # exceeds broadcast limits, pass broadcast_ranks=False to fall
+            # back to the partitioned join.)
+            rside = F.broadcast(ranks) if broadcast_ranks else ranks
+            contribs = ed.join(
+                rside, ed["src"] == rside["node"]
+            ).select(F.col("dst"), F.expr("rank div deg").alias("c"))
+            ranks = (
+                contribs.groupBy(F.col("dst").alias("node"))
+                .agg(
+                    (F.lit(teleport) + F.expr(f"({damping_pct} * sum(c)) div 100"))
+                    .cast("long")
+                    .alias("rank")
+                )
+                .localCheckpoint(eager=True)
+            )
     return ranks
 
 
@@ -189,8 +189,6 @@ def triangle_counts(edges_oneway: DataFrame) -> DataFrame:
     The triangle SET is orientation-invariant, so a SQL oracle that
     orients by plain id (3-way self-join with a<b<c) counts the
     same triangles."""
-    from filesystemagent_spark.caching import track_persist
-
     # The edge list is referenced four times below (degree pass via
     # both directions, then the orientation join) and is usually an
     # expensive derivation (co-purchase pair expansion) — persist it,

@@ -37,6 +37,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from filesystemagent_spark.caching import track_persist, tracked_scope
 from filesystemagent_spark.sources.txtable import TxTable
 
 
@@ -54,38 +55,41 @@ def build_bm25_index(
     the rest at query time). Corpus scalars (n_docs, avgdl) ride the
     postings table's app metadata — they are the model, two doubles.
     Returns the two opened tables."""
-    from filesystemagent_spark.caching import track_persist
     from filesystemagent_spark.functions import text as T
 
-    # persisted: the scalars agg AND the postings write both consume it
-    # — without the persist the tokenizer (the dominant cost of an index
-    # build) runs over the whole corpus twice
-    toks = track_persist(
-        docs.select(
-            F.col(id_col).alias("doc_id"), T.tokens(F.col(text_col)).alias("tk")
-        )
-    )
-    scalars = toks.agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg(F.size("tk").cast("double")).alias("avgdl"),
-    ).collect()[0]
-    postings = (
-        toks.select(
-            "doc_id",
-            F.size("tk").cast("double").alias("dl"),
-            F.explode("tk").alias("term"),
-        )
-        .groupBy("term", "doc_id", "dl")
-        .agg(F.count("*").cast("double").alias("tf"))
-        .repartitionByRange(n_term_partitions, "term")
-        .sortWithinPartitions("term", "doc_id")
-    )
     post_t = TxTable(os.path.join(index_dir, "postings"))
-    post_t.init(
-        postings,
-        app={"n_docs": float(scalars["n_docs"]), "avgdl": float(scalars["avgdl"])},
-    )
-    toks.unpersist()
+    with tracked_scope():
+        # persisted: the scalars agg AND the postings write both consume
+        # it — without the persist the tokenizer (the dominant cost of
+        # an index build) runs over the whole corpus twice
+        toks = track_persist(
+            docs.select(
+                F.col(id_col).alias("doc_id"),
+                T.tokens(F.col(text_col)).alias("tk"),
+            )
+        )
+        scalars = toks.agg(
+            F.count("*").cast("double").alias("n_docs"),
+            F.avg(F.size("tk").cast("double")).alias("avgdl"),
+        ).collect()[0]
+        postings = (
+            toks.select(
+                "doc_id",
+                F.size("tk").cast("double").alias("dl"),
+                F.explode("tk").alias("term"),
+            )
+            .groupBy("term", "doc_id", "dl")
+            .agg(F.count("*").cast("double").alias("tf"))
+            .repartitionByRange(n_term_partitions, "term")
+            .sortWithinPartitions("term", "doc_id")
+        )
+        post_t.init(
+            postings,
+            app={
+                "n_docs": float(scalars["n_docs"]),
+                "avgdl": float(scalars["avgdl"]),
+            },
+        )
     # df(term) = posting rows per term (postings are (term, doc) grain)
     term_t = TxTable(os.path.join(index_dir, "terms"))
     term_t.init(
@@ -115,7 +119,7 @@ def start_bm25_index_sink(
     maintain_retention_seconds: float = 600.0,
 ):
     """INCREMENTAL index maintenance from the source corpus's CHANGE
-    FEED (round 8) — the continuous-ingest twin of `build_bm25_index`,
+    FEED — the continuous-ingest twin of `build_bm25_index`,
     completing the 'derived artifact replaces recomputation' story:
     documents merge/update/delete in the source TxTable and the
     (postings, terms) index tracks them WITHOUT ever rescanning the
@@ -148,7 +152,7 @@ def start_bm25_index_sink(
     unstamped — idempotent no-ops. Query-path scores from the
     maintained index are bit-identical to a fresh full build over the
     final corpus (pinned by tests/test_training_queries.py and the
-    `doc_bm25_incremental_index` oracle). Round 9: the postings
+    `doc_bm25_incremental_index` oracle). The postings
     table's MoR tombstones fold under the shared sink policy
     (`fold_depth`/`fold_covered_frac`) — delete-only runs otherwise
     stack one anti-join per batch over every covered read."""
@@ -180,154 +184,150 @@ def start_bm25_index_sink(
         # the shared change-feed reduction (streaming/sinks); this sink
         # keeps its own two-table tail — the postings and terms halves
         # stamp independently, which _apply_index_batch can't express
-        imgs, latest_imgs, before_imgs = _batch_images(batch_df, id_col)
-        tokenized = lambda df: df.select(  # noqa: E731
-            F.col(id_col).alias("doc_id"), T.tokens(F.col(text_col)).alias("tk")
+        _, latest_imgs, before_imgs = _batch_images(batch_df, id_col)
+        tokenized = lambda df: track_persist(  # noqa: E731
+            df.select(
+                F.col(id_col).alias("doc_id"),
+                T.tokens(F.col(text_col)).alias("tk"),
+            )
         )
-        before = tokenized(before_imgs).cache()
+        before = tokenized(before_imgs)
         after = tokenized(
-            latest_imgs.filter(
-                F.col("_change_type").isin("insert", "upsert")
+            latest_imgs.filter(F.col("_change_type").isin("insert", "upsert"))
+        )
+        # ONE driver action for all four batch scalars (guide §7.3:
+        # fixed per-action scheduling cost dominates KB-scale
+        # micro-batches): conditional aggregation over the union of
+        # the two cached image sets replaces two separate agg jobs —
+        # and populates both caches for the builds below.
+        side = lambda s, col: F.when(F.col("_side") == s, col)  # noqa: E731
+        b_n, b_dl, a_n, a_dl = (
+            before.withColumn("_side", F.lit(0))
+            .unionByName(after.withColumn("_side", F.lit(1)))
+            .agg(
+                F.count(side(0, F.lit(1))),
+                F.coalesce(F.sum(side(0, F.size("tk"))), F.lit(0)),
+                F.count(side(1, F.lit(1))),
+                F.coalesce(F.sum(side(1, F.size("tk"))), F.lit(0)),
             )
-        ).cache()
-        try:
-            # ONE driver action for all four batch scalars (guide §7.3:
-            # fixed per-action scheduling cost dominates KB-scale
-            # micro-batches): conditional aggregation over the union of
-            # the two cached image sets replaces two separate agg jobs —
-            # and populates both caches for the builds below.
-            side = lambda s, col: F.when(F.col("_side") == s, col)  # noqa: E731
-            b_n, b_dl, a_n, a_dl = (
-                before.withColumn("_side", F.lit(0))
-                .unionByName(after.withColumn("_side", F.lit(1)))
-                .agg(
-                    F.count(side(0, F.lit(1))),
-                    F.coalesce(F.sum(side(0, F.size("tk"))), F.lit(0)),
-                    F.count(side(1, F.lit(1))),
-                    F.coalesce(F.sum(side(1, F.size("tk"))), F.lit(0)),
+            .first()
+        )
+        if a_n == 0 and b_n == 0:
+            return  # empty batch: idempotent no-op, unstamped
+        if not done_p:
+            new_post = (
+                after.select(
+                    "doc_id",
+                    F.size("tk").cast("double").alias("dl"),
+                    F.explode("tk").alias("term"),
                 )
-                .first()
+                .groupBy("term", "doc_id", "dl")
+                .agg(F.count("*").cast("double").alias("tf"))
+                .repartitionByRange(n_term_partitions, "term")
+                .sortWithinPartitions("term", "doc_id")
             )
-            if a_n == 0 and b_n == 0:
-                return  # empty batch: idempotent no-op, unstamped
-            if not done_p:
-                new_post = (
-                    after.select(
-                        "doc_id",
-                        F.size("tk").cast("double").alias("dl"),
-                        F.explode("tk").alias("term"),
-                    )
-                    .groupBy("term", "doc_id", "dl")
-                    .agg(F.count("*").cast("double").alias("tf"))
-                    .repartitionByRange(n_term_partitions, "term")
-                    .sortWithinPartitions("term", "doc_id")
-                )
-                if post_t.latest_version() == 0:
-                    post_t.init(
-                        new_post,
-                        app={
-                            "n_docs": float(a_n),
-                            "total_dl": float(a_dl),
-                            "avgdl": float(a_dl) / a_n if a_n else 0.0,
-                            STAMP: batch_id,
-                        },
-                    )
-                else:
-                    n0 = float(pa["n_docs"] or 0.0)
-                    tdl0 = float(pa["total_dl"] or 0.0)
-                    n1 = n0 + a_n - b_n
-                    tdl1 = tdl0 + float(a_dl) - float(b_dl)
-                    scalars = {
-                        "n_docs": n1,
-                        "total_dl": tdl1,
-                        "avgdl": (tdl1 / n1) if n1 else 0.0,
+            if post_t.latest_version() == 0:
+                post_t.init(
+                    new_post,
+                    app={
+                        "n_docs": float(a_n),
+                        "total_dl": float(a_dl),
+                        "avgdl": float(a_dl) / a_n if a_n else 0.0,
                         STAMP: batch_id,
-                    }
-                    touched = before.select("doc_id").unionByName(
-                        after.select("doc_id")
-                    )
-                    post_t.delete_keys(touched, ["doc_id"], mode="mor")
-                    # a_n already counted the after set — no isEmpty job
-                    if a_n == 0:
-                        post_t.commit_app(scalars)
-                    else:
-                        post_t.merge_into(
-                            new_post, ["term", "doc_id"], app=scalars
-                        )
-                    _maybe_fold_tombstones(
-                        post_t, spark, fold_depth, fold_covered_frac
-                    )
-            if not done_t:
-                per_term = lambda df, sign: (  # noqa: E731
-                    df.select(F.explode(F.array_distinct("tk")).alias("term"))
-                    .groupBy("term")
-                    .agg((F.count("*") * sign).cast("double").alias("_delta"))
+                    },
                 )
-                delta = (
-                    per_term(after, 1)
-                    .unionByName(per_term(before, -1))
-                    .groupBy("term")
-                    .agg(F.sum("_delta").alias("_delta"))
-                    # a term present in both images of an update nets
-                    # to zero — rewriting its row would be correct but
-                    # pure churn (most of an update batch's vocabulary)
-                    .filter(F.col("_delta") != 0)
+            else:
+                n0 = float(pa["n_docs"] or 0.0)
+                tdl0 = float(pa["total_dl"] or 0.0)
+                n1 = n0 + a_n - b_n
+                tdl1 = tdl0 + float(a_dl) - float(b_dl)
+                scalars = {
+                    "n_docs": n1,
+                    "total_dl": tdl1,
+                    "avgdl": (tdl1 / n1) if n1 else 0.0,
+                    STAMP: batch_id,
+                }
+                touched = before.select("doc_id").unionByName(
+                    after.select("doc_id")
                 )
-                if term_t.latest_version() == 0:
-                    term_t.init(
-                        delta.select("term", F.col("_delta").alias("df"))
-                        .repartitionByRange(n_term_partitions, "term")
-                        .sortWithinPartitions("term"),
-                        app={STAMP: batch_id},
-                    )
-                elif (p := _merge_probe(delta, ["term"])["term"]) == ("empty",):
-                    # the probe (needed below anyway) doubles as the
-                    # emptiness check — one driver action, not two. No
-                    # net df change (an update that kept every term's
-                    # presence) — merge_into's empty no-op would skip
-                    # the app, so stamp explicitly: the 'last commit
-                    # carries the stamp' discipline
-                    term_t.commit_app({STAMP: batch_id})
+                post_t.delete_keys(touched, ["doc_id"], mode="mor")
+                # a_n already counted the after set — no isEmpty job
+                if a_n == 0:
+                    post_t.commit_app(scalars)
                 else:
-                    # footprint-pruned read of the old rows: the batch
-                    # vocabulary bounds the slice (vals probe when
-                    # narrow, min/max range when wide)
-                    where = (
-                        None
-                        if p is None
-                        else [("term", "in", p[1])]
-                        if p[0] == "vals"
-                        else [("term", ">=", p[1]), ("term", "<=", p[2])]
-                        if p[0] == "range"
-                        else [("term", "in", [])]
+                    post_t.merge_into(
+                        new_post, ["term", "doc_id"], app=scalars
                     )
-                    current = term_t.read(spark, where=where).select(
-                        "term", "df"
-                    )
-                    updates = delta.join(current, "term", "left").select(
-                        "term",
-                        (
-                            F.coalesce(F.col("df"), F.lit(0.0))
-                            + F.col("_delta")
-                        ).alias("df"),
-                    )
-                    term_t.merge_into(updates, ["term"], app={STAMP: batch_id})
-            # long-horizon retention pacing, both tables (see
-            # streaming/sinks._maybe_pace_retention; n_docs/total_dl
-            # scalars survive — latest_app_value walks past
-            # maintenance commits)
-            _maybe_pace_retention(
-                post_t, spark, batch_id, every=maintain_every,
-                retention_seconds=maintain_retention_seconds,
+                _maybe_fold_tombstones(
+                    post_t, spark, fold_depth, fold_covered_frac
+                )
+        if not done_t:
+            per_term = lambda df, sign: (  # noqa: E731
+                df.select(F.explode(F.array_distinct("tk")).alias("term"))
+                .groupBy("term")
+                .agg((F.count("*") * sign).cast("double").alias("_delta"))
             )
-            _maybe_pace_retention(
-                term_t, spark, batch_id, every=maintain_every,
-                retention_seconds=maintain_retention_seconds,
+            delta = (
+                per_term(after, 1)
+                .unionByName(per_term(before, -1))
+                .groupBy("term")
+                .agg(F.sum("_delta").alias("_delta"))
+                # a term present in both images of an update nets
+                # to zero — rewriting its row would be correct but
+                # pure churn (most of an update batch's vocabulary)
+                .filter(F.col("_delta") != 0)
             )
-        finally:
-            before.unpersist()
-            after.unpersist()
-            imgs.unpersist()
+            if term_t.latest_version() == 0:
+                term_t.init(
+                    delta.select("term", F.col("_delta").alias("df"))
+                    .repartitionByRange(n_term_partitions, "term")
+                    .sortWithinPartitions("term"),
+                    app={STAMP: batch_id},
+                )
+            elif (p := _merge_probe(delta, ["term"])["term"]) == ("empty",):
+                # the probe (needed below anyway) doubles as the
+                # emptiness check — one driver action, not two. No
+                # net df change (an update that kept every term's
+                # presence) — merge_into's empty no-op would skip
+                # the app, so stamp explicitly: the 'last commit
+                # carries the stamp' discipline
+                term_t.commit_app({STAMP: batch_id})
+            else:
+                # footprint-pruned read of the old rows: the batch
+                # vocabulary bounds the slice (vals probe when
+                # narrow, min/max range when wide)
+                where = (
+                    None
+                    if p is None
+                    else [("term", "in", p[1])]
+                    if p[0] == "vals"
+                    else [("term", ">=", p[1]), ("term", "<=", p[2])]
+                    if p[0] == "range"
+                    else [("term", "in", [])]
+                )
+                current = term_t.read(spark, where=where).select(
+                    "term", "df"
+                )
+                updates = delta.join(current, "term", "left").select(
+                    "term",
+                    (
+                        F.coalesce(F.col("df"), F.lit(0.0))
+                        + F.col("_delta")
+                    ).alias("df"),
+                )
+                term_t.merge_into(updates, ["term"], app={STAMP: batch_id})
+        # long-horizon retention pacing, both tables (see
+        # streaming/sinks._maybe_pace_retention; n_docs/total_dl
+        # scalars survive — latest_app_value walks past
+        # maintenance commits)
+        _maybe_pace_retention(
+            post_t, spark, batch_id, every=maintain_every,
+            retention_seconds=maintain_retention_seconds,
+        )
+        _maybe_pace_retention(
+            term_t, spark, batch_id, every=maintain_every,
+            retention_seconds=maintain_retention_seconds,
+        )
 
     return _start_feed_sink(
         spark, source_table, checkpoint, apply_batch,
@@ -354,7 +354,7 @@ def bm25_from_index(
     per-(term, doc) part is computed row-locally, parts pivoted and
     added in FIXED term order (bit-identical to the full-scan scorer).
     The corpus text is never touched, and a T-term query is 2 Spark
-    jobs, not ~2T (round 9 — was one read + one collect per term)."""
+    jobs, not ~2T (one read + one collect per term would be)."""
     post_t = TxTable(os.path.join(index_dir, "postings"))
     term_t = TxTable(os.path.join(index_dir, "terms"))
     # corpus scalars ride commit app metadata; maintenance commits that

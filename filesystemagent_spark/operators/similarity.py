@@ -21,6 +21,7 @@ import random
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from filesystemagent_spark.caching import track_persist, tracked_scope
 from filesystemagent_spark.functions import vectors as V
 from filesystemagent_spark.operators.relational import grouped_top_k
 
@@ -307,7 +308,6 @@ def cosine_near_dup_pairs_lsh(
     ).select("bucket", "_id")  # candidate generation carries IDS ONLY
     # Tiny (bucket, id) projection, but each self-join branch would
     # otherwise re-run the plane projections over every vector.
-    from filesystemagent_spark.caching import track_persist
     from filesystemagent_spark.functions.pqkernels import make_pair_dot_udf
     from filesystemagent_spark.operators.dedup import _bucket_pairs
 
@@ -641,91 +641,87 @@ def start_ivf_index_sink(
         # new-regime assignments into an old-regime cells table would
         # mix regimes permanently (see retrain_ivf_index)
         _check_ivf_epochs(index_dir)
-        imgs, latest, before = _batch_images(batch_df, id_col)
-        assigned = None
+        _, latest, before = _batch_images(batch_df, id_col)
         cents = TxTable(cent_path).read(spark)
-        try:
-            if latest.isEmpty():
-                return  # empty batch: idempotent no-op, unstamped
-            post = latest.filter(
-                F.col("_change_type").isin("insert", "upsert")
-            ).select(id_col, vec_col)
-            # staged CLUSTERED on cell_id: every file covers a tight
-            # cell range, so manifest stats skipping serves the probe
-            # path (read_cells_for_queries) nprobe/|cells| of the files.
-            # keep_score carries each row's assigned-centroid cosine —
-            # the drift ledger's addition — dropped before staging.
-            assigned = assign_cells(
+        if latest.isEmpty():
+            return  # empty batch: idempotent no-op, unstamped
+        post = latest.filter(
+            F.col("_change_type").isin("insert", "upsert")
+        ).select(id_col, vec_col)
+        # staged CLUSTERED on cell_id: every file covers a tight
+        # cell range, so manifest stats skipping serves the probe
+        # path (read_cells_for_queries) nprobe/|cells| of the files.
+        # keep_score carries each row's assigned-centroid cosine —
+        # the drift ledger's addition — dropped before staging.
+        assigned = track_persist(
+            assign_cells(
                 post, cents,
                 id_col=id_col, vec_col=vec_col, nprobe=1, keep_score=True,
-            ).cache()
-            # ledger counts track rows that CONTRIBUTE cosine mass
-            # (count of the metric column, null-skipping — review
-            # finding: count(*) would deflate the mean with rows whose
-            # invalid vectors yield null cosine); a_rows drives the
-            # merge decision and counts every staged row. Both sides'
-            # scalars come from ONE driver action (guide §7.3): a
-            # side-marked union replaces the two separate agg jobs —
-            # and its a-side pass populates `assigned`'s cache for the
-            # staging write below.
-            b_assigned = assign_cells(
-                before.select(id_col, vec_col), cents,
-                id_col=id_col, vec_col=vec_col, nprobe=1, keep_score=True,
             )
-            cos = lambda s: F.when(F.col("_side") == s, F.col("_cell_cos"))  # noqa: E731
-            a_sum, a_n, a_rows, b_sum, b_n = (
-                assigned.select("_cell_cos").withColumn("_side", F.lit(1))
-                .unionByName(
-                    b_assigned.select("_cell_cos").withColumn(
-                        "_side", F.lit(0)
-                    )
+        )
+        # ledger counts track rows that CONTRIBUTE cosine mass
+        # (count of the metric column, null-skipping — review
+        # finding: count(*) would deflate the mean with rows whose
+        # invalid vectors yield null cosine); a_rows drives the
+        # merge decision and counts every staged row. Both sides'
+        # scalars come from ONE driver action (guide §7.3): a
+        # side-marked union replaces the two separate agg jobs —
+        # and its a-side pass populates `assigned`'s cache for the
+        # staging write below.
+        b_assigned = assign_cells(
+            before.select(id_col, vec_col), cents,
+            id_col=id_col, vec_col=vec_col, nprobe=1, keep_score=True,
+        )
+        cos = lambda s: F.when(F.col("_side") == s, F.col("_cell_cos"))  # noqa: E731
+        a_sum, a_n, a_rows, b_sum, b_n = (
+            assigned.select("_cell_cos").withColumn("_side", F.lit(1))
+            .unionByName(
+                b_assigned.select("_cell_cos").withColumn(
+                    "_side", F.lit(0)
                 )
-                .agg(
-                    F.coalesce(F.sum(cos(1)), F.lit(0.0)),
-                    F.count(cos(1)),
-                    F.count(F.when(F.col("_side") == 1, F.lit(1))),
-                    F.coalesce(F.sum(cos(0)), F.lit(0.0)),
-                    F.count(cos(0)),
-                )
-                .first()
             )
-            staged = assigned.drop("_cell_cos").repartitionByRange(
-                8, "cell_id"
+            .agg(
+                F.coalesce(F.sum(cos(1)), F.lit(0.0)),
+                F.count(cos(1)),
+                F.count(F.when(F.col("_side") == 1, F.lit(1))),
+                F.coalesce(F.sum(cos(0)), F.lit(0.0)),
+                F.count(cos(0)),
             )
-            # pre-ledger guard shared with the PQ sink: skip the
-            # extras on a table lacking the ledger keys instead of
-            # fabricating a zero-based baseline
-            ledger_extra = _ledger_continuation(
-                cells_t,
-                ("ivf_cos_sum", "ivf_n", "ivf_cos_sum0", "ivf_n0"),
-                lambda prev: {
-                    "ivf_cos_sum": float(prev["ivf_cos_sum"] or 0.0)
-                    + float(a_sum) - float(b_sum),
-                    "ivf_n": int(prev["ivf_n"] or 0) + int(a_n) - int(b_n),
-                    "ivf_cos_sum0": prev["ivf_cos_sum0"],
-                    "ivf_n0": prev["ivf_n0"],
-                },
-            )
-            _apply_index_batch(
-                cells_t, spark, batch_id=batch_id, stamp_key=STAMP,
-                latest=latest, id_col=id_col, new_rows=staged,
-                merge_keys=[id_col],
-                app_extra_init={
-                    "ivf_cos_sum": float(a_sum), "ivf_n": int(a_n),
-                    "ivf_cos_sum0": float(a_sum), "ivf_n0": int(a_n),
-                },
-                app_extra=ledger_extra,
-                # the ledger agg already counted the staged rows — no
-                # extra isEmpty action (review finding)
-                has_new=int(a_rows) > 0,
-                fold_depth=fold_depth, fold_covered_frac=fold_covered_frac,
-                maintain_every=maintain_every,
-                maintain_retention_seconds=maintain_retention_seconds,
-            )
-        finally:
-            imgs.unpersist()
-            if assigned is not None:
-                assigned.unpersist()
+            .first()
+        )
+        staged = assigned.drop("_cell_cos").repartitionByRange(
+            8, "cell_id"
+        )
+        # pre-ledger guard shared with the PQ sink: skip the
+        # extras on a table lacking the ledger keys instead of
+        # fabricating a zero-based baseline
+        ledger_extra = _ledger_continuation(
+            cells_t,
+            ("ivf_cos_sum", "ivf_n", "ivf_cos_sum0", "ivf_n0"),
+            lambda prev: {
+                "ivf_cos_sum": float(prev["ivf_cos_sum"] or 0.0)
+                + float(a_sum) - float(b_sum),
+                "ivf_n": int(prev["ivf_n"] or 0) + int(a_n) - int(b_n),
+                "ivf_cos_sum0": prev["ivf_cos_sum0"],
+                "ivf_n0": prev["ivf_n0"],
+            },
+        )
+        _apply_index_batch(
+            cells_t, spark, batch_id=batch_id, stamp_key=STAMP,
+            latest=latest, id_col=id_col, new_rows=staged,
+            merge_keys=[id_col],
+            app_extra_init={
+                "ivf_cos_sum": float(a_sum), "ivf_n": int(a_n),
+                "ivf_cos_sum0": float(a_sum), "ivf_n0": int(a_n),
+            },
+            app_extra=ledger_extra,
+            # the ledger agg already counted the staged rows — no
+            # extra isEmpty action (review finding)
+            has_new=int(a_rows) > 0,
+            fold_depth=fold_depth, fold_covered_frac=fold_covered_frac,
+            maintain_every=maintain_every,
+            maintain_retention_seconds=maintain_retention_seconds,
+        )
 
     return _start_feed_sink(
         spark, source_table, checkpoint, apply_batch,
@@ -869,11 +865,13 @@ def retrain_ivf_index(
         # resume an interrupted retrain: the new centroids already
         # landed; only the cells half is missing
         epoch = e_cent
-    assigned = assign_cells(
-        live, cent_t.read(spark),
-        id_col=id_col, vec_col=vec_col, nprobe=1, keep_score=True,
-    ).cache()
-    try:
+    with tracked_scope():
+        assigned = track_persist(
+            assign_cells(
+                live, cent_t.read(spark),
+                id_col=id_col, vec_col=vec_col, nprobe=1, keep_score=True,
+            )
+        )
         s, n = assigned.agg(
             F.coalesce(F.sum("_cell_cos"), F.lit(0.0)), F.count("*")
         ).first()
@@ -888,8 +886,6 @@ def retrain_ivf_index(
             assigned.drop("_cell_cos").repartitionByRange(8, "cell_id"),
             app=app,
         )
-    finally:
-        assigned.unpersist()
     return ivf_drift_info(index_dir)
 
 
@@ -962,7 +958,6 @@ def semdedup_incremental(
     Exactness for the recipe is test-pinned: pairs equal a fresh
     same-cell cosine sweep over the union corpus restricted to pairs
     touching the batch."""
-    from filesystemagent_spark.caching import track_persist
     from filesystemagent_spark.sources.txtable import TxTable
 
     # ONE assignment pass serves both the batch keys and the probe
@@ -1391,79 +1386,76 @@ def pq_codebooks(
     have been the bottleneck. The GEMM path is the same shape the
     blocked-cosine operator uses: scan-local, zero shuffle, vectorized.
     """
-    from pyspark import StorageLevel
-
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     d_sub = dim // m
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
-    subs = (
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .select(
-            "_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("sub_id"),
-                            F.transform(
-                                F.slice(F.col("_v"), s * d_sub + 1, d_sub),
-                                lambda x: x.cast("double"),
-                            ).alias("sv"),
-                        )
-                        for s in range(m)
-                    ]
-                )
-            ).alias("p"),
-        )
-        .select("_id", "p.sub_id", F.col("p.sv").alias("_sv"))
-        .repartition(par)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    seed_ids = [
-        r[0]
-        for r in df.select(F.col(id_col).alias("_sid"))
-        .orderBy(F.md5(F.col("_sid").cast("string")), F.col("_sid"))
-        .limit(k)
-        .collect()
-    ]
-    cell_of = {sid: i + 1 for i, sid in enumerate(seed_ids)}
-    books: dict[tuple[int, int], list[float]] = {}
-    for r in subs.filter(F.col("_id").isin(list(seed_ids))).collect():
-        books[(r["sub_id"], cell_of[r["_id"]])] = [float(x) for x in r["_sv"]]
-
-    def assign_udf():
-        # Arrow-batched cosine argmax over all m·k candidates
-        # (functions/pqkernels.py): one numpy GEMM per (subspace,
-        # batch), the current iteration's codebook in the closure.
-        import numpy as np
-
-        from filesystemagent_spark.functions.pqkernels import make_assign_udf
-
-        C = np.zeros((m, k, d_sub))
-        for (s, j), cent in books.items():
-            C[s, j - 1] = cent
-        return make_assign_udf(C)
-
-    for _ in range(max_iter):
-        updated = (
-            subs.withColumn("cell_id", assign_udf()("sub_id", "_sv"))
-            .select("sub_id", "cell_id", F.posexplode("_sv").alias("pos", "val"))
-            .groupBy("sub_id", "cell_id", "pos")
-            .agg(F.avg("val").alias("val"))
-            .groupBy("sub_id", "cell_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "val"))),
-                    lambda st: st["val"],
-                ).alias("centroid")
+    with tracked_scope():
+        subs = track_persist(
+            df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+            .select(
+                "_id",
+                F.explode(
+                    F.array(
+                        *[
+                            F.struct(
+                                F.lit(s).alias("sub_id"),
+                                F.transform(
+                                    F.slice(F.col("_v"), s * d_sub + 1, d_sub),
+                                    lambda x: x.cast("double"),
+                                ).alias("sv"),
+                            )
+                            for s in range(m)
+                        ]
+                    )
+                ).alias("p"),
             )
-            .collect()  # <= m*k rows — the model, one job per iteration
+            .select("_id", "p.sub_id", F.col("p.sv").alias("_sv"))
+            .repartition(par)
         )
-        for r in updated:
-            books[(r["sub_id"], r["cell_id"])] = [float(x) for x in r["centroid"]]
-    subs.unpersist()
+        seed_ids = [
+            r[0]
+            for r in df.select(F.col(id_col).alias("_sid"))
+            .orderBy(F.md5(F.col("_sid").cast("string")), F.col("_sid"))
+            .limit(k)
+            .collect()
+        ]
+        cell_of = {sid: i + 1 for i, sid in enumerate(seed_ids)}
+        books: dict[tuple[int, int], list[float]] = {}
+        for r in subs.filter(F.col("_id").isin(list(seed_ids))).collect():
+            books[(r["sub_id"], cell_of[r["_id"]])] = [float(x) for x in r["_sv"]]
+
+        def assign_udf():
+            # Arrow-batched cosine argmax over all m·k candidates
+            # (functions/pqkernels.py): one numpy GEMM per (subspace,
+            # batch), the current iteration's codebook in the closure.
+            import numpy as np
+
+            from filesystemagent_spark.functions.pqkernels import make_assign_udf
+
+            C = np.zeros((m, k, d_sub))
+            for (s, j), cent in books.items():
+                C[s, j - 1] = cent
+            return make_assign_udf(C)
+
+        for _ in range(max_iter):
+            updated = (
+                subs.withColumn("cell_id", assign_udf()("sub_id", "_sv"))
+                .select("sub_id", "cell_id", F.posexplode("_sv").alias("pos", "val"))
+                .groupBy("sub_id", "cell_id", "pos")
+                .agg(F.avg("val").alias("val"))
+                .groupBy("sub_id", "cell_id")
+                .agg(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("pos", "val"))),
+                        lambda st: st["val"],
+                    ).alias("centroid")
+                )
+                .collect()  # <= m*k rows — the model, one job per iteration
+            )
+            for r in updated:
+                books[(r["sub_id"], r["cell_id"])] = [float(x) for x in r["centroid"]]
     return spark.createDataFrame(
         [(s, c, books[(s, c)]) for s in range(m) for c in range(1, k + 1)],
         "sub_id int, cell_id int, centroid array<double>",
@@ -1694,102 +1686,95 @@ def start_pq_index_sink(
         # retrain_pq_index): merging new-regime codes into an
         # old-regime codes table would mix regimes permanently
         _check_pq_epochs(index_dir)
-        imgs, latest, before = _batch_images(batch_df, id_col)
-        encoded = None
-        try:
-            if latest.isEmpty():
-                return  # empty batch: idempotent no-op, unstamped
-            book = TxTable(book_path).read(spark)
-            post = latest.filter(
-                F.col("_change_type").isin("insert", "upsert")
-            ).select(id_col, vec_col)
-            encoded = pq_encode_with_err(
-                post, book,
-                id_col=id_col, vec_col=vec_col, dim=dim, m=m, k=k_cells,
-            )
-            if cluster_by_cells:
-                encoded = encoded.join(
-                    assign_cells(
-                        post, TxTable(cent_path).read(spark),
-                        id_col=id_col, vec_col=vec_col, nprobe=1,
-                    ).select(id_col, "cell_id"),
-                    id_col,
-                ).repartitionByRange(8, "cell_id")
-            encoded = encoded.cache()
-            # ledger counts track rows that CONTRIBUTE error mass
-            # (null-skipping count of the metric column — review
-            # finding: count(*) deflates the mean with invalid-vector
-            # rows whose err is null); a_rows drives the merge
-            # Both sides' ledger scalars in ONE action and both code
-            # histograms in ONE action (guide §7.3: four agg jobs per
-            # micro-batch were fixed driver overhead): side-marked
-            # unions over the cached encodings.
-            b_encoded = pq_encode_with_err(
+        _, latest, before = _batch_images(batch_df, id_col)
+        if latest.isEmpty():
+            return  # empty batch: idempotent no-op, unstamped
+        book = TxTable(book_path).read(spark)
+        post = latest.filter(
+            F.col("_change_type").isin("insert", "upsert")
+        ).select(id_col, vec_col)
+        encoded = pq_encode_with_err(
+            post, book,
+            id_col=id_col, vec_col=vec_col, dim=dim, m=m, k=k_cells,
+        )
+        if cluster_by_cells:
+            encoded = encoded.join(
+                assign_cells(
+                    post, TxTable(cent_path).read(spark),
+                    id_col=id_col, vec_col=vec_col, nprobe=1,
+                ).select(id_col, "cell_id"),
+                id_col,
+            ).repartitionByRange(8, "cell_id")
+        encoded = track_persist(encoded)
+        # ledger counts track rows that CONTRIBUTE error mass
+        # (null-skipping count of the metric column — review
+        # finding: count(*) deflates the mean with invalid-vector
+        # rows whose err is null); a_rows drives the merge
+        # Both sides' ledger scalars in ONE action and both code
+        # histograms in ONE action (guide §7.3: four agg jobs per
+        # micro-batch were fixed driver overhead): side-marked
+        # unions over the cached encodings.
+        b_encoded = track_persist(
+            pq_encode_with_err(
                 before.select(id_col, vec_col), book,
                 id_col=id_col, vec_col=vec_col, dim=dim, m=m, k=k_cells,
-            ).cache()
-            try:
-                both = (
-                    encoded.select("_pq_err", "codes")
-                    .withColumn("_side", F.lit(1))
-                    .unionByName(
-                        b_encoded.select("_pq_err", "codes").withColumn(
-                            "_side", F.lit(0)
-                        )
-                    )
-                )
-                err = lambda s: F.when(  # noqa: E731
-                    F.col("_side") == s, F.col("_pq_err")
-                )
-                a_err, a_n, a_rows, b_err, b_n = both.agg(
-                    F.coalesce(F.sum(err(1)), F.lit(0.0)),
-                    F.count(err(1)),
-                    F.count(F.when(F.col("_side") == 1, F.lit(1))),
-                    F.coalesce(F.sum(err(0)), F.lit(0.0)),
-                    F.count(err(0)),
-                ).first()
-                a_hist, b_hist = _pq_code_hists_2(both)
-            finally:
-                b_encoded.unpersist()
-            # pre-ledger guard shared with the IVF sink: skip the
-            # extras on a table lacking the ledger keys instead of
-            # fabricating a zero-based baseline
-            ledger_extra = _ledger_continuation(
-                codes_t, LEDGER_KEYS,
-                lambda prev: {
-                    "pq_err_sum": float(prev["pq_err_sum"] or 0.0)
-                    + float(a_err) - float(b_err),
-                    "pq_n": int(prev["pq_n"] or 0) + int(a_n) - int(b_n),
-                    "pq_err_sum0": prev["pq_err_sum0"],
-                    "pq_n0": prev["pq_n0"],
-                    "pq_hist": _hist_merge(
-                        prev["pq_hist"] or {}, a_hist, b_hist
-                    ),
-                    "pq_hist0": prev["pq_hist0"],
-                },
             )
-            _apply_index_batch(
-                codes_t, spark, batch_id=batch_id, stamp_key=STAMP,
-                latest=latest, id_col=id_col,
-                new_rows=encoded.drop("_pq_err"),
-                merge_keys=[id_col],
-                app_extra_init={
-                    "pq_err_sum": float(a_err), "pq_n": int(a_n),
-                    "pq_err_sum0": float(a_err), "pq_n0": int(a_n),
-                    "pq_hist": a_hist, "pq_hist0": a_hist,
-                },
-                app_extra=ledger_extra,
-                # the ledger agg already counted the staged rows — no
-                # extra isEmpty action
-                has_new=int(a_rows) > 0,
-                fold_depth=fold_depth, fold_covered_frac=fold_covered_frac,
-                maintain_every=maintain_every,
-                maintain_retention_seconds=maintain_retention_seconds,
+        )
+        both = (
+            encoded.select("_pq_err", "codes")
+            .withColumn("_side", F.lit(1))
+            .unionByName(
+                b_encoded.select("_pq_err", "codes").withColumn(
+                    "_side", F.lit(0)
+                )
             )
-        finally:
-            imgs.unpersist()
-            if encoded is not None:
-                encoded.unpersist()
+        )
+        err = lambda s: F.when(  # noqa: E731
+            F.col("_side") == s, F.col("_pq_err")
+        )
+        a_err, a_n, a_rows, b_err, b_n = both.agg(
+            F.coalesce(F.sum(err(1)), F.lit(0.0)),
+            F.count(err(1)),
+            F.count(F.when(F.col("_side") == 1, F.lit(1))),
+            F.coalesce(F.sum(err(0)), F.lit(0.0)),
+            F.count(err(0)),
+        ).first()
+        a_hist, b_hist = _pq_code_hists_2(both)
+        # pre-ledger guard shared with the IVF sink: skip the
+        # extras on a table lacking the ledger keys instead of
+        # fabricating a zero-based baseline
+        ledger_extra = _ledger_continuation(
+            codes_t, LEDGER_KEYS,
+            lambda prev: {
+                "pq_err_sum": float(prev["pq_err_sum"] or 0.0)
+                + float(a_err) - float(b_err),
+                "pq_n": int(prev["pq_n"] or 0) + int(a_n) - int(b_n),
+                "pq_err_sum0": prev["pq_err_sum0"],
+                "pq_n0": prev["pq_n0"],
+                "pq_hist": _hist_merge(
+                    prev["pq_hist"] or {}, a_hist, b_hist
+                ),
+                "pq_hist0": prev["pq_hist0"],
+            },
+        )
+        _apply_index_batch(
+            codes_t, spark, batch_id=batch_id, stamp_key=STAMP,
+            latest=latest, id_col=id_col,
+            new_rows=encoded.drop("_pq_err"),
+            merge_keys=[id_col],
+            app_extra_init={
+                "pq_err_sum": float(a_err), "pq_n": int(a_n),
+                "pq_err_sum0": float(a_err), "pq_n0": int(a_n),
+                "pq_hist": a_hist, "pq_hist0": a_hist,
+            },
+            app_extra=ledger_extra,
+            # the ledger agg already counted the staged rows — no
+            # extra isEmpty action
+            has_new=int(a_rows) > 0,
+            fold_depth=fold_depth, fold_covered_frac=fold_covered_frac,
+            maintain_every=maintain_every,
+            maintain_retention_seconds=maintain_retention_seconds,
+        )
 
     return _start_feed_sink(
         spark, source_table, checkpoint, apply_batch,
@@ -1981,8 +1966,8 @@ def retrain_pq_index(
             ).select(id_col, "cell_id"),
             id_col,
         ).repartitionByRange(8, "cell_id")
-    encoded = encoded.cache()
-    try:
+    with tracked_scope():
+        encoded = track_persist(encoded)
         s, n = encoded.agg(
             F.coalesce(F.sum("_pq_err"), F.lit(0.0)), F.count("*")
         ).first()
@@ -1996,8 +1981,6 @@ def retrain_pq_index(
         if stamp is not None:
             app["pq_batch_id"] = stamp
         codes_t.overwrite(encoded.drop("_pq_err"), app=app)
-    finally:
-        encoded.unpersist()
     return pq_drift_info(index_dir)
 
 
@@ -2172,7 +2155,6 @@ def knn_ivfpq(
 
     import numpy as np
 
-    from filesystemagent_spark.caching import track_persist
     from filesystemagent_spark.functions.pqkernels import make_lut_udf
     from filesystemagent_spark.sources.txtable import TxTable
 

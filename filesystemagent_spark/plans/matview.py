@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from filesystemagent_spark.caching import track_persist, tracked_scope
 from filesystemagent_spark.operators.rollup import continuous_aggregate, time_bucket
 
 
@@ -111,8 +112,8 @@ class MaterializedRollup:
         src = self._source(spark).filter(
             self._bucket_day(F.col(self.ts_col)).isin(days)
         )
-        partials = self._partials_for(src).persist()
-        try:
+        with tracked_scope():
+            partials = track_persist(self._partials_for(src))
             # Small collect: one row per refreshed day (the worklist is
             # day-granular, never fact-sized).
             present = {
@@ -121,8 +122,6 @@ class MaterializedRollup:
             partials.write.mode("overwrite").option(
                 "partitionOverwriteMode", "dynamic"
             ).partitionBy(self.PART_COL).parquet(self.mv_dir)
-        finally:
-            partials.unpersist()
         # Days requested but producing zero partials: dynamic overwrite
         # wrote nothing for them, so the stale directory would survive
         # forever. Delete it through the Hadoop FS API (works on any

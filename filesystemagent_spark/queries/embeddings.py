@@ -338,29 +338,23 @@ def embedding_knn_pq_auto_with_meta(
     from filesystemagent_spark.operators.anntune import knn_pq_auto
 
     emb = track_persist(S.normalize(Catalog(spark, sf_dir).embeddings))
-    try:
-        queries = emb.filter(F.col("vec_id") < N_QUERIES)
-        book = S.pq_codebooks(
-            emb, id_col="vec_id", vec_col="embedding", dim=DIM, m=8, k=16,
-            max_iter=2,
+    queries = emb.filter(F.col("vec_id") < N_QUERIES)
+    book = S.pq_codebooks(
+        emb, id_col="vec_id", vec_col="embedding", dim=DIM, m=8, k=16,
+        max_iter=2,
+    )
+    codes = track_persist(
+        S.pq_encode(
+            emb, book, id_col="vec_id", vec_col="embedding", dim=DIM,
+            m=8, k=16,
         )
-        codes = track_persist(
-            S.pq_encode(
-                emb, book, id_col="vec_id", vec_col="embedding", dim=DIM,
-                m=8, k=16,
-            )
-        )
-        try:
-            out, meta = knn_pq_auto(
-                queries, codes, book, emb, id_col="vec_id",
-                vec_col="embedding", dim=DIM, m=8, k_cells=16, k=K,
-                target_recall=AUTO_TARGET_RECALL, sample_queries=N_QUERIES,
-            )
-            return out.orderBy("query_id", "rnk"), meta
-        finally:
-            codes.unpersist()
-    finally:
-        emb.unpersist()
+    )
+    out, meta = knn_pq_auto(
+        queries, codes, book, emb, id_col="vec_id",
+        vec_col="embedding", dim=DIM, m=8, k_cells=16, k=K,
+        target_recall=AUTO_TARGET_RECALL, sample_queries=N_QUERIES,
+    )
+    return out.orderBy("query_id", "rnk"), meta
 
 
 @register(
@@ -369,9 +363,9 @@ def embedding_knn_pq_auto_with_meta(
 )
 def embedding_knn_pq_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with TARGET-RECALL auto-tuned rerank
-    depth (round 8 — completes the tuner family alongside ivf_auto /
-    lsh_auto): ADC scans the 16x-compressed codes, the tuner doubles
-    the exact-rerank candidate depth until the sampled recall meets
+    depth (the tuner family beside ivf_auto / lsh_auto): ADC scans the
+    16x-compressed codes, the tuner doubles the exact-rerank candidate
+    depth until the sampled recall meets
     {AUTO_TARGET_RECALL}, terminating provably met at rerank = corpus
     size (exact rescore of everything). The static embedding_knn_pq's
     fixed top-50 rerank measured 0.41 recall@10 at sf0.1 (RECALL.md);
@@ -386,8 +380,8 @@ def embedding_knn_pq_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("vector", "ivf", "txtable", "change-feed", "incremental"),
 )
 def embedding_stored_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTALLY MAINTAINED vector index (round 8 — the vector leg
-    of the maintained-artifact trilogy beside the join views and the
+    """INCREMENTALLY MAINTAINED vector index (the vector leg of the
+    maintained-artifact trilogy beside the join views and the
     incremental BM25 index): the embedding corpus lives in a TxTable
     and mutates — initial three quarters, then a merge that INSERTS
     the held-out quarter and UPDATES every vec_id%7==2 embedding to
@@ -810,10 +804,10 @@ def embedding_hard_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain). Rounded-cosine + id tie-break keeps both engines ranking
     identically.
 
-    SINGLE-PASS (round 6): both rank directions ride one window family
-    over (query_id, same_label) — the scored broadcast-crossJoin scan
-    runs ONCE (one Exchange, two Window sorts) instead of once per
-    branch as in round 5 (tests/test_plans.py pins the single scan)."""
+    SINGLE-PASS: both rank directions ride one window family over
+    (query_id, same_label) — the scored broadcast-crossJoin scan runs
+    ONCE (one Exchange, two Window sorts) instead of once per branch
+    (tests/test_plans.py pins the single scan)."""
     from pyspark.sql import Window
 
     emb = Catalog(spark, sf_dir).embeddings
@@ -983,7 +977,7 @@ def embedding_knn_stored_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     at = TxTable(stage + "/cells")
     at.init(cells)
 
-    # probe-pruned read (round 8): only files whose cell range overlaps
+    # probe-pruned read: only files whose cell range overlaps
     # the queries' nprobe cells are scanned (plan-gated in
     # tests/test_similarity.py::test_stored_ivf_probe_read_prunes_files)
     stored_centroids = ct.read(spark)
@@ -1007,7 +1001,7 @@ def embedding_knn_stored_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_semdedup_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Incremental SEMANTIC dedup (round 9) — the SemDeDup
+    """Incremental SEMANTIC dedup — the SemDeDup
     continuous-ingest shape and the vector twin of
     `doc_minhash_incremental_stored`: the incoming batch (vec_id%4==0
     plus one exact re-submission of a corpus vector under a synthetic
@@ -1064,8 +1058,8 @@ def embedding_semdedup_incremental(
 def embedding_stored_pq_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """INCREMENTALLY MAINTAINED PQ codes (round 9 — the
-    compressed-vector leg of the maintained-artifact family):
+    """INCREMENTALLY MAINTAINED PQ codes (the compressed-vector leg of
+    the maintained-artifact family):
     `embedding_knn_pq` re-encodes the corpus inside the query; here
     the 16×-smaller codes table is the PERSISTED artifact, maintained
     from the corpus TxTable's CHANGE FEED by
@@ -1167,7 +1161,7 @@ def embedding_knn_stored_ivf_auto_with_meta(
 def embedding_knn_stored_ivf_auto(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Auto-tuned ANN served from the STORED IVF index (round 9):
+    """Auto-tuned ANN served from the STORED IVF index:
     `embedding_knn_stored_ivf` probes a static nprobe=2 (measured 0.38
     recall@10 at sf0.1, RECALL.md); this surface tunes nprobe against
     the stored cells table itself (the tuner never re-reads or
@@ -1258,8 +1252,8 @@ def embedding_knn_ivfpq_auto_with_meta(
 )
 def embedding_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF+PQ COMPOSED serving over maintained stored artifacts
-    (round 10 — the Faiss IVFPQ + refine recipe, the 100 TB vector
-    shape the verdict queued): probe-pruned cells → ADC over ONLY the
+    (the Faiss IVFPQ + refine recipe, the 100 TB vector shape):
+    probe-pruned cells → ADC over ONLY the
     probed cells' codes (read 16× smaller than raw, manifest stats
     skip non-probed files) → exact rerank fetching only the
     candidates' true vectors. The codes table carries cell_id and is
@@ -1296,7 +1290,7 @@ ORDER BY query_id, rnk
 """,
 )
 def embedding_knn_ivfpq_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVFPQ serving path made ORACLE-CHECKABLE (round 10): at
+    """The IVFPQ serving path made ORACLE-CHECKABLE: at
     nprobe = |cells| and rerank = |corpus| every stage of `knn_ivfpq`
     is exhaustive — the probe covers all cells, ADC retrieves every
     code, and the exact rerank rescoring equals brute force PROVABLY —

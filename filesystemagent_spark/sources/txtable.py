@@ -1476,24 +1476,24 @@ class TxTable:
         dropped (the lost-update case of plain last-writer-wins
         parquet). Returns the committed version; `last_merge_info`
         records what the commit did (rewritten/carried file counts,
-        whether a rebase happened) for observability and tests."""
+        whether a rebase happened) for observability and tests.
+
+        ``updates`` is persisted through ``caching.track_persist``, so
+        the caller's ``tracked_scope`` (a sink micro-batch is one)
+        releases it; an ``updates`` the caller persisted is read as-is
+        and never released here."""
         from pyspark.sql import functions as F
+
+        from filesystemagent_spark.caching import track_persist
 
         spark = updates.sparkSession
         # The updates plan is executed several times per attempt (key
         # probe, anti-join, data write, optional change images) and
-        # again on every CAS retry — persist it once (tracked: the
-        # sweep/driver release hook drains it; standalone callers get
-        # it dropped with the session). `updates` is CALLER-OWNED: if
-        # the caller already persisted it, a second persist at a
-        # different StorageLevel raises, and the session-wide release
-        # hook would later unpersist a cache the caller still relies
-        # on — so an already-persisted batch is used as-is.
-        from filesystemagent_spark.caching import track_persist
-
-        sl = updates.storageLevel
-        if not (sl.useMemory or sl.useDisk or sl.useOffHeap):
-            updates = track_persist(updates)
+        # again on every CAS retry — persist it once. The enclosing
+        # tracked_scope (a sink's micro-batch) or the registry drain
+        # releases it; a batch the caller already persisted is used
+        # as-is and stays the caller's to release.
+        updates = track_persist(updates)
         for _attempt in range(max_retries):
             base = self.latest_version()
             if base == 0:

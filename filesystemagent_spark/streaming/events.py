@@ -171,25 +171,6 @@ def recent_failures(
     )
 
 
-def run_available_now(stream_df: DataFrame, sink_name: str, checkpoint: str) -> None:
-    """Drain everything currently available into a memory sink and stop
-    — the test/availableNow harness (complete mode for aggregates)."""
-    has_agg = stream_df.isStreaming
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("complete" if _is_aggregate(stream_df) else "append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def _is_aggregate(df: DataFrame) -> bool:
-    return "Aggregate" in df._jdf.queryExecution().analyzed().toString()
-
-
 def tail_events(events_table: DataFrame, n: int = 100) -> DataFrame:
     """The reference's /events tail endpoint (monitoring.py:67-69):
     ORDER BY ts DESC LIMIT n over the sink table — retention policy is

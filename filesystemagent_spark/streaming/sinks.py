@@ -12,6 +12,12 @@ This is the parquet-only stand-in for a transactional MERGE sink
 (Delta/Iceberg); the keyed-upsert view on top resolves multiple
 versions of a key to the newest batch — the same last-writer-wins
 contract as sources/listing.merge_catalog.
+
+Every sink starts through `_start_batches`, which runs each
+micro-batch inside its own `caching.tracked_scope()`: whatever a batch
+persists (its change-feed images, a merge's updates) is released when
+the batch returns, so a sink that runs for days holds no cache from
+earlier batches.
 """
 
 from __future__ import annotations
@@ -20,6 +26,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from filesystemagent_spark.caching import track_persist, tracked_scope
 
 
 def _change_feed_reader(
@@ -46,6 +54,32 @@ def _change_feed_reader(
     return reader.option(
         "cursorfile", _cursorfile_location(checkpoint)
     ).load()
+
+
+def _start_batches(
+    stream_df: DataFrame,
+    apply_batch,
+    checkpoint: str,
+    *,
+    available_now: bool,
+    output_mode: str | None = None,
+):
+    """Start `stream_df` with `apply_batch(batch_df, batch_id)` as its
+    foreachBatch callback under `checkpoint`. Each call runs inside a
+    `tracked_scope()`, so the batch's persists are released with it."""
+
+    def scoped(batch_df: DataFrame, batch_id: int) -> None:
+        with tracked_scope():
+            apply_batch(batch_df, batch_id)
+
+    writer = stream_df.writeStream.foreachBatch(scoped).option(
+        "checkpointLocation", checkpoint
+    )
+    if output_mode:
+        writer = writer.outputMode(output_mode)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def _local_checkpoint_dir(checkpoint: str) -> str | None:
@@ -97,14 +131,10 @@ def start_idempotent_file_sink(
             os.path.join(path, f"batch_id={batch_id}")
         )
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
+    return _start_batches(
+        stream_df, write_batch, checkpoint,
+        available_now=available_now, output_mode=output_mode,
     )
-    if output_mode:
-        writer = writer.outputMode(output_mode)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_upserted(
@@ -162,14 +192,10 @@ def start_txtable_merge_sink(
             return  # replayed batch: already committed
         t.merge_into(batch_df, key_list, app={"batch_id": batch_id})
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
+    return _start_batches(
+        stream_df, write_batch, checkpoint,
+        available_now=available_now, output_mode=output_mode,
     )
-    if output_mode:
-        writer = writer.outputMode(output_mode)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_incremental_agg_sink(
@@ -200,13 +226,7 @@ def start_incremental_agg_sink(
     table's app metadata, so a replayed batch no-ops. Groups whose
     count reaches zero keep a row with n_rows=0 (MERGE is upsert-only;
     filter them on read or vacuum them with delete_where offline)."""
-    from filesystemagent_spark.sources.txchanges import register_txtable_changes
     from filesystemagent_spark.sources.txtable import TxTable
-
-    register_txtable_changes(spark)
-    stream = _change_feed_reader(
-        spark, source_table, checkpoint, max_versions_per_trigger
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         t = TxTable(derived_table)
@@ -251,12 +271,11 @@ def start_incremental_agg_sink(
         )
         t.merge_into(updates, [group_col], app={"batch_id": batch_id})
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _start_feed_sink(
+        spark, source_table, checkpoint, apply_batch,
+        available_now=available_now,
+        max_versions_per_trigger=max_versions_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_incremental_join_sink(
@@ -340,12 +359,9 @@ def _start_feed_sink(
     stream = _change_feed_reader(
         spark, source_table, checkpoint, max_versions_per_trigger
     )
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _start_batches(
+        stream, apply_batch, checkpoint, available_now=available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _post_key_prune(post: DataFrame, on: str) -> list | None:
@@ -370,10 +386,9 @@ def _post_key_prune(post: DataFrame, on: str) -> list | None:
 
 
 def _batch_images(batch_df: DataFrame, id_col: str):
-    """The change-feed reduction every index sink shares (round-9
-    review finding: four sinks had pasted copies of these windows, so
-    an image-ordering fix would have to land identically in four
-    files). Returns (imgs, latest, before):
+    """The change-feed reduction every feed sink shares, so an
+    image-ordering fix lands in one place. Returns (imgs, latest,
+    before):
 
     - ``latest``  — each key's LAST image in the batch
       (update_preimage sorts before its version's post-image, so a
@@ -383,9 +398,11 @@ def _batch_images(batch_df: DataFrame, id_col: str):
       first seen as insert/upsert did not exist before the batch) —
       the subtraction side for ledgers and df deltas.
 
-    ``imgs`` is CACHED (both filters and any downstream build share
-    one execution of the batch windows); the caller must unpersist it
-    when the batch completes."""
+    ``imgs`` is every image with the helper columns ``_rn_last`` and
+    ``_rn_first`` (``latest`` and ``before`` carry them too). It is
+    persisted through ``track_persist`` (both filters and any
+    downstream build share one execution of the windows), so the
+    batch's ``tracked_scope`` releases it."""
     from pyspark.sql import Window
 
     pri = F.when(
@@ -400,10 +417,9 @@ def _batch_images(batch_df: DataFrame, id_col: str):
     w_first = Window.partitionBy(id_col).orderBy(
         F.col("_commit_version").asc(), pre_pri.asc()
     )
-    imgs = (
+    imgs = track_persist(
         batch_df.withColumn("_rn_last", F.row_number().over(w_last))
         .withColumn("_rn_first", F.row_number().over(w_first))
-        .cache()
     )
     latest = imgs.filter(F.col("_rn_last") == 1)
     before = imgs.filter(
@@ -460,7 +476,7 @@ def _apply_index_batch(
     if has_new:
         t.merge_into(new_rows, merge_keys, app=app)
     # delete-only runs stack MoR tombstones; fold under the shared
-    # policy (measured round 9: depth 6 / covered_frac 1.0 pre-fix)
+    # policy (measured without it: depth 6 / covered_frac 1.0)
     _maybe_fold_tombstones(t, spark, fold_depth, fold_covered_frac)
     _maybe_pace_retention(
         t, spark, batch_id, every=maintain_every,
@@ -470,15 +486,14 @@ def _apply_index_batch(
 
 
 def _ledger_continuation(t, keys: tuple[str, ...], build) -> dict:
-    """The pre-ledger guard the drift-ledger sinks share (round-10
-    review: the IVF and PQ sinks carried verbatim copies of this
-    subtle invariant): continuation extras need a baseline to adjust
-    from — on a table whose app metadata lacks ANY ledger key (built
-    by an older sink, or by hand), seeding the running sums from zero
-    would fabricate a valid-LOOKING ledger off a wrong base, so the
-    extras are skipped entirely and the drift-info reader keeps
-    raising its honest 'no drift ledger' error. ``build(prev)``
-    returns the extras dict given the previous app values."""
+    """The pre-ledger guard the drift-ledger sinks share: continuation
+    extras need a baseline to adjust from — on a table whose app
+    metadata lacks ANY ledger key (built by an older sink, or by
+    hand), seeding the running sums from zero would fabricate a
+    valid-LOOKING ledger off a wrong base, so the extras are skipped
+    entirely and the drift-info reader keeps raising its honest 'no
+    drift ledger' error. ``build(prev)`` returns the extras dict given
+    the previous app values."""
     prev = t.latest_app_values(keys)  # one manifest walk, not len(keys)
     if t.latest_version() > 0 and any(v is None for v in prev.values()):
         return {}
@@ -497,7 +512,7 @@ def _maybe_pace_retention(
     retention_seconds: float = 600.0,
 ) -> None:
     """Long-horizon retention pacing for a continuous sink loop
-    (round 10, measured in scripts/exp_sink_longevity.py): every
+    (measured in scripts/exp_sink_longevity.py): every
     applying micro-batch is 1–3 TxTable commits plus
     O(shuffle-partitions) small staged files, so an UNPACED loop
     accretes ~8 files/batch forever and a commit log that grew to
@@ -542,9 +557,9 @@ def _maybe_fold_tombstones(
     shares (SCALE.md-measured thresholds: fold when depth > 4 OR
     covered_frac > 0.5). Post-image batches USUALLY self-materialize —
     the merge rewrites the covered files, pruning the tombstone — but
-    DELETE-ONLY batches stack plainly (measured round 9: six
-    delete-only batches left the BM25 postings at depth 6 with
-    covered_frac 1.0 — every read paying six anti-joins over every
+    DELETE-ONLY batches stack plainly (measured: six delete-only
+    batches left the BM25 postings at depth 6 with covered_frac 1.0
+    — every read paying six anti-joins over every
     file), and a MIXED batch that deletes key A while upserting key B
     leaves A's files covered. So the check runs after EVERY applying
     batch, on BOTH thresholds. Layout-only commit: feed-transparent,
@@ -603,61 +618,42 @@ def _join_view_apply(
         # an earlier version's insert for a since-updated or
         # since-deleted key is superseded, and a version's own
         # update_preimage always loses to its post-image.
-        from pyspark.sql import Window
-
-        pri = F.when(
-            F.col("_change_type") == "update_preimage", F.lit(0)
-        ).otherwise(F.lit(1))
-        w = Window.partitionBy(this_pk).orderBy(
-            F.col("_commit_version").desc(), pri.desc()
+        latest = _batch_images(batch_df, this_pk)[1]
+        if latest.isEmpty():
+            return
+        post = latest.filter(
+            F.col("_change_type").isin("insert", "upsert")
+        ).drop("_rn_last", "_rn_first", "_change_type", "_commit_version")
+        # persisted so the isEmpty probe and the merge share ONE
+        # execution of the post-image ⋈ other-side join per batch;
+        # the other side reads ONLY the files the batch's join-key
+        # footprint can touch (prune derived from the persisted
+        # post-images — one tiny distinct/agg job per batch)
+        new_rows = track_persist(
+            post.join(other_df_fn(_post_key_prune(post, on)), on)
         )
-        latest = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .cache()
-        )
-        new_rows = None
-        try:
-            if latest.isEmpty():
+        if t.latest_version() == 0:
+            try:
+                t.init(new_rows, app={stamp_key: batch_id})
                 return
-            post = (
-                latest.filter(F.col("_change_type").isin("insert", "upsert"))
-                .drop("_rn", "_change_type", "_commit_version")
-            )
-            # cached so the isEmpty probe and the merge share ONE
-            # execution of the post-image ⋈ other-side join per batch;
-            # the other side reads ONLY the files the batch's join-key
-            # footprint can touch (prune derived from the cached
-            # post-images — one tiny distinct/agg job per batch)
-            new_rows = post.join(other_df_fn(_post_key_prune(post, on)), on).cache()
-            if t.latest_version() == 0:
-                try:
-                    t.init(new_rows, app={stamp_key: batch_id})
-                    return
-                except CommitConflict:
-                    pass  # the other leg initialized concurrently
-            has_new = not new_rows.isEmpty()
-            # the batch's LAST commit carries the stamp: a delete-only
-            # batch would otherwise never stamp (the empty merge
-            # no-ops) and every replay would add a redundant tombstone;
-            # delete_keys itself falls back to an app-only commit when
-            # its stats prove the delete a no-op, so the stamp lands
-            # exactly once on every path
-            t.delete_keys(
-                latest.select(this_pk), [this_pk], mode="mor",
-                app=None if has_new else {stamp_key: batch_id},
-            )
-            if has_new:
-                t.merge_into(
-                    new_rows, merge_keys, app={stamp_key: batch_id}
-                )
-            _maybe_fold_tombstones(
-                t, batch_df.sparkSession, fold_depth, fold_covered_frac
-            )
-        finally:
-            latest.unpersist()
-            if new_rows is not None:
-                new_rows.unpersist()
+            except CommitConflict:
+                pass  # the other leg initialized concurrently
+        has_new = not new_rows.isEmpty()
+        # the batch's LAST commit carries the stamp: a delete-only
+        # batch would otherwise never stamp (the empty merge no-ops)
+        # and every replay would add a redundant tombstone;
+        # delete_keys itself falls back to an app-only commit when its
+        # stats prove the delete a no-op, so the stamp lands exactly
+        # once on every path
+        t.delete_keys(
+            latest.select(this_pk), [this_pk], mode="mor",
+            app=None if has_new else {stamp_key: batch_id},
+        )
+        if has_new:
+            t.merge_into(new_rows, merge_keys, app={stamp_key: batch_id})
+        _maybe_fold_tombstones(
+            t, batch_df.sparkSession, fold_depth, fold_covered_frac
+        )
 
     return apply_batch
 

@@ -101,6 +101,25 @@ def test_verification_predicates(spark):
     assert us == [False, False, True, None]
 
 
+def test_is_elevated_task(spark):
+    """P16: a task is elevated when it runs at the Highest level and is
+    not Disabled; SQL three-valued logic decides the NULL rows."""
+    rows = [
+        ("Highest", "Ready"),
+        ("Highest", "Disabled"),
+        ("Limited", "Ready"),
+        ("Limited", "Disabled"),
+        (None, "Ready"),
+        ("Highest", None),
+        ("Limited", None),
+        (None, None),
+    ]
+    got = col_eval(
+        spark, rows, "lvl string, st string", P.is_elevated_task, "lvl", "st"
+    )
+    assert got == [True, False, False, False, None, None, False, None]
+
+
 def test_vt_positive(spark):
     rows = [("5|72",), ("0|70",), ("0|0",), ("",), ("Unknown",), (None,), ("bad",)]
     got = col_eval(spark, rows, "vt: string", P.vt_positive, "vt")

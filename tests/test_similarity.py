@@ -659,7 +659,10 @@ def test_tune_knn_ivf_meets_target_with_monotone_curve(spark, sf_dir):
     """The IVF tuner escalates nprobe until the sampled recall meets
     the target; the curve is non-decreasing (probing more cells only
     ever ADDS candidates) and the tuner always terminates met — at
-    worst nprobe = n_cells, which is exact."""
+    worst nprobe = n_cells, which is exact. A corpus the caller
+    persisted is still cached when the tuner returns, and the tuner's
+    own persists are released."""
+    from filesystemagent_spark.caching import tracked_count
     from filesystemagent_spark.operators.anntune import tune_knn_ivf
 
     emb = Catalog(spark, sf_dir).embeddings
@@ -675,10 +678,17 @@ def test_tune_knn_ivf_meets_target_with_monotone_curve(spark, sf_dir):
     rs = [c["recall"] for c in meta["curve"]]
     assert all(b >= a - 1e-9 for a, b in zip(rs, rs[1:])), rs
     # the hardest target still terminates: exact at nprobe = n_cells
-    meta1 = tune_knn_ivf(
-        queries, emb, cents, id_col="vec_id", vec_col="embedding",
-        k=K, target_recall=1.0, sample_queries=N_QUERIES,
-    )
+    owned = emb.select("vec_id", "embedding").persist()
+    try:
+        level, mark = owned.storageLevel, tracked_count()
+        meta1 = tune_knn_ivf(
+            queries, owned, cents, id_col="vec_id", vec_col="embedding",
+            k=K, target_recall=1.0, sample_queries=N_QUERIES,
+        )
+        assert owned.storageLevel == level  # the caller's cache survives
+        assert tracked_count() == mark
+    finally:
+        owned.unpersist()
     assert meta1["met_target"] and meta1["nprobe"] <= meta1["n_cells"]
 
 
@@ -769,6 +779,7 @@ def test_ivf_feed_sink_tracks_dml(spark, sf_dir, tmp_path):
     nothing (exactly-once stamp)."""
     import os
 
+    from filesystemagent_spark.caching import tracked_count
     from filesystemagent_spark.operators.similarity import (
         start_ivf_index_sink,
     )
@@ -799,7 +810,9 @@ def test_ivf_feed_sink_tracks_dml(spark, sf_dir, tmp_path):
         emb.filter(F.col("vec_id") % 9 == 5).select("vec_id"),
         ["vec_id"], change_feed=True,
     )
+    mark = tracked_count()
     start_ivf_index_sink(spark, src, idx, ckpt).awaitTermination()
+    assert tracked_count() == mark  # each micro-batch released its persists
 
     final = emb.filter(F.col("vec_id") % 9 != 5).select(
         "vec_id",
@@ -1303,6 +1316,7 @@ def test_pq_feed_sink_tracks_dml_and_matches_fresh_encode(
     in-memory one, and an empty re-drain publishes nothing."""
     import os
 
+    from filesystemagent_spark.caching import tracked_count
     from filesystemagent_spark.operators.similarity import (
         start_pq_index_sink,
     )
@@ -1338,9 +1352,11 @@ def test_pq_feed_sink_tracks_dml_and_matches_fresh_encode(
         emb.filter(F.col("vec_id") % 9 == 5).select("vec_id"),
         ["vec_id"], change_feed=True,
     )
+    mark = tracked_count()
     start_pq_index_sink(
         spark, src, idx, ckpt, dim=DIM, m=8, k_cells=16
     ).awaitTermination()
+    assert tracked_count() == mark  # each micro-batch released its persists
 
     final = t.read(spark)
     codes_t = TxTable(os.path.join(idx, "codes"))

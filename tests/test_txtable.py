@@ -111,7 +111,10 @@ def test_merge_catalog_semantics_match(spark, tmp_path):
 def test_streaming_merge_sink_exactly_once(spark, tmp_path):
     """Stream → TxTable MERGE sink: upserts apply in batch order, and a
     REPLAYED batch (same batch_id) is a no-op — the manifest's app
-    metadata makes the at-least-once foreachBatch write exactly-once."""
+    metadata makes the at-least-once foreachBatch write exactly-once.
+    Each micro-batch releases what its merge persisted, so a drain
+    leaves the tracked-persist registry at its pre-sink mark."""
+    from filesystemagent_spark.caching import tracked_count
     from filesystemagent_spark.streaming.sinks import start_txtable_merge_sink
 
     src = str(tmp_path / "src")
@@ -121,10 +124,12 @@ def test_streaming_merge_sink_exactly_once(spark, tmp_path):
 
     tbl = str(tmp_path / "tbl")
     ckpt = str(tmp_path / "ckpt")
+    mark = tracked_count()
     start_txtable_merge_sink(
         spark.readStream.schema("file_path string, size bigint").parquet(src),
         tbl, ckpt, "file_path",
     ).awaitTermination()
+    assert tracked_count() == mark
 
     t = TxTable(tbl)
     assert {r.file_path: r.size for r in t.read(spark).collect()} == {"/a": 1, "/b": 2}
@@ -151,6 +156,7 @@ def test_streaming_merge_sink_exactly_once(spark, tmp_path):
         spark.readStream.schema("file_path string, size bigint").parquet(src),
         tbl, ckpt, "file_path",
     ).awaitTermination()
+    assert tracked_count() == mark
     got = {r.file_path: r.size for r in t.read(spark).collect()}
     assert got == {"/a": 1, "/b": 20, "/c": 3}
     assert t.latest_app()["batch_id"] > applied
@@ -1091,7 +1097,9 @@ def test_incremental_agg_sink_tracks_source_aggregates(spark, tmp_path):
     derived per-group (count, sum) TxTable across init, a
     group-moving upsert, an insert, and a delete — matching a fresh
     snapshot aggregate after every drain, without rescanning the
-    source. Idempotent on an empty re-drain."""
+    source. Idempotent on an empty re-drain, and every drain leaves the
+    tracked-persist registry where it found it."""
+    from filesystemagent_spark.caching import tracked_count
     from filesystemagent_spark.streaming.sinks import start_incremental_agg_sink
 
     def rows(data):
@@ -1104,9 +1112,11 @@ def test_incremental_agg_sink_tracks_source_aggregates(spark, tmp_path):
     src.init(rows([(1, "a", 10), (2, "a", 20), (3, "b", 30)]))       # v1
 
     def drain():
+        mark = tracked_count()
         start_incremental_agg_sink(
             spark, src_path, drv_path, ckpt, group_col="grp", value_col="v"
         ).awaitTermination()
+        assert tracked_count() == mark
 
     def derived():
         return {
