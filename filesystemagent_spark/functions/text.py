@@ -1,8 +1,11 @@
 """Text-analysis column expressions for the `documents` table.
 
 All JVM-side (`pyspark.sql.functions` higher-order functions) — no
-Python UDFs in the hot path, so whole-stage codegen applies and the
-same expressions run unchanged over 100 TB of documents.
+Python UDFs in the hot path, so the same expressions run unchanged over
+100 TB of documents. Higher-order functions are interpreted, outside
+whole-stage codegen, with no common-subexpression elimination inside a
+lambda: bind a shared subtree once (see `shingles`) rather than
+repeating it in a lambda body.
 
 Capability extension beyond the reference (BASELINE.json north-star):
 language-ID, quality scoring, token counting, fingerprinting for a
@@ -113,15 +116,21 @@ def shingles(text: Column | str, n: int = 3) -> Column:
 
     Pure expression: sequence over token positions + slice + join.
     Returns an empty array when the doc has fewer than ``n`` tokens.
-    One SQL string (see _tokens_sql) — the token subtree appears three
-    times, exactly as the Column build embedded it three times.
-    """
+
+    The tokenizer runs once per row: it is bound to the lambda variable
+    ``__sh_t`` by a one-element ``transform``, and the size checks and
+    the per-position slices read that variable. Spark interprets
+    higher-order-function lambdas and neither eliminates common
+    subexpressions nor hoists them out of a lambda, so a token subtree
+    pasted into the per-position lambda would re-split the document at
+    every position (quadratic in its length)."""
     from filesystemagent_spark.functions.hashing import _col_sql
 
     toks = _tokens_sql(_col_sql(text))
     return F.expr(
-        f"CASE WHEN size({toks}) < {n} "
+        f"transform(array({toks}), __sh_t -> "
+        f"CASE WHEN size(__sh_t) < {n} "
         f"THEN CAST(array() AS ARRAY<STRING>) "
-        f"ELSE transform(sequence(1, greatest(size({toks}) - {n - 1}, 0)), "
-        f"__sh_i -> concat_ws(' ', slice({toks}, __sh_i, {n}))) END"
+        f"ELSE transform(sequence(1, greatest(size(__sh_t) - {n - 1}, 0)), "
+        f"__sh_i -> concat_ws(' ', slice(__sh_t, __sh_i, {n}))) END)[0]"
     )

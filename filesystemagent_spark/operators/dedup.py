@@ -61,8 +61,10 @@ def _shingled_docs(
 ) -> DataFrame:
     """(_id, _shingles) with empty-shingle docs dropped, persisted:
     shingling feeds the signature AND the verify sides — persist so
-    the expensive expression tree runs once (tracked: the sweep/driver
-    release hook unpersists it after the result materializes).
+    the shingle kernel (one tokenizer pass per doc, see
+    functions/text.shingles) runs once per doc, not once per consumer
+    (tracked: the caller's scope releases it after the result
+    materializes).
 
     The empty-shingle filter sits ABOVE the persist, not inside it:
     inside, the optimizer substitutes the shingle expression into the
@@ -119,28 +121,31 @@ def _jaccard_verify(
     docs_b: DataFrame,
     *,
     names: tuple[str, str] = ("id_a", "id_b"),
+    on: Sequence[str] = (),
     threshold: float,
     round_to: int | None,
 ) -> DataFrame:
     """Exact Jaccard over distinct shingle sets for candidate pairs
     (names[0], names[1]); each id column joins its side's
-    `_shingled_docs` rows. Keeps pairs with jaccard >= threshold,
-    compared after the optional ``round_to`` rounding so two engines
-    with identical double arithmetic agree at the boundary."""
+    `_shingled_docs` rows. `on` names further columns of `docs_b` that
+    the second join also matches in `cand`, and that the result keeps.
+    Keeps pairs with jaccard >= threshold, compared after the optional
+    ``round_to`` rounding so two engines with identical double
+    arithmetic agree at the boundary. The score is one projection over
+    the joined rows."""
     a = docs_a.select(F.col("_id").alias(names[0]), F.col("_shingles").alias("sh_a"))
-    b = docs_b.select(F.col("_id").alias(names[1]), F.col("_shingles").alias("sh_b"))
-    jac = F.col("_inter").cast("double") / (
-        F.size("sh_a") + F.size("sh_b") - F.col("_inter")
-    ).cast("double")
+    b = docs_b.select(
+        F.col("_id").alias(names[1]), F.col("_shingles").alias("sh_b"), *on
+    )
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    jac = inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter).cast("double")
     if round_to is not None:
         jac = F.round(jac, round_to)
     return (
         cand.join(a, names[0])
-        .join(b, names[1])
-        .withColumn("_inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("jaccard", jac)
+        .join(b, [names[1], *on])
+        .select(names[0], names[1], jac.alias("jaccard"), *on)
         .filter(F.col("jaccard") >= threshold)
-        .select(names[0], names[1], "jaccard")
     )
 
 
@@ -233,9 +238,14 @@ def _banded_keys(
     consumer joins on (self-join for batch dedup, one-sided join for
     the incremental index).
 
-    Base hashes go in their own projection: HOFs are outside codegen,
-    so inlining the md5/xxhash transform into minhash_signature would
-    re-evaluate it once per permutation (no CSE across HOF children).
+    Three projections: base hashes, signature, then the band structs
+    unpacked by `inline`. Base hashes and the signature each get their
+    own projection because HOFs are interpreted, outside codegen:
+    inlining the md5/xxhash transform into minhash_signature would
+    re-evaluate it once per permutation, and inlining the signature
+    into the band keys once per band (no CSE across HOF children, and
+    CollapseProject keeps a non-cheap column that is read more than
+    once in its own projection).
     The bucket cap drops pathological buckets (boilerplate collapse)
     before any join turns quadratic; the bucket size is a window count
     over the SAME key the joins shuffle on, so the one exchange serves
@@ -244,9 +254,9 @@ def _banded_keys(
     the dominant compute — runs once, not once per join branch."""
     rows_per_band = num_hashes // bands
     base_fn = H.shingle_hashes_md5 if base == "md5" else H.shingle_hashes
-    signed = docs.select(
-        "_id", base_fn("_shingles").alias("_hv")
-    ).withColumn("_sig", H.minhash_signature_from_hashes("_hv", num_hashes, seed))
+    signed = docs.select("_id", base_fn("_shingles").alias("_hv")).select(
+        "_id", H.minhash_signature_from_hashes("_hv", num_hashes, seed).alias("_sig")
+    )
 
     if band_key == "hash":
         bands_col = H.band_keys("_sig", bands, rows_per_band)
@@ -265,9 +275,7 @@ def _banded_keys(
                 )
             )
         )
-    banded = signed.select("_id", F.explode(bands_col).alias("bk")).select(
-        "_id", "bk.band", "bk.band_hash"
-    )
+    banded = signed.select("_id", F.inline(bands_col))
     if max_bucket is None:
         # UNCAPPED — the stored-index maintenance shape: the cap is a
         # property of the whole corpus, so an incrementally-maintained
@@ -636,11 +644,8 @@ def minhash_dedup_incremental(
         band_key=band_key,
         max_bucket=max_bucket,
     )
-    idx = index_df.select(
-        F.col(id_col).alias("_cid"), "band", "band_hash"
-    )
     return _incremental_pairs(
-        corpus_df, new_docs, new_banded, idx, id_col, text_col,
+        corpus_df, new_docs, new_banded, index_df, id_col, text_col,
         shingle_n=shingle_n, threshold=threshold, round_to=round_to,
     )
 
@@ -649,7 +654,7 @@ def _incremental_pairs(
     corpus_df: DataFrame,
     new_docs: DataFrame,
     new_banded: DataFrame,
-    idx: DataFrame,
+    index_df: DataFrame,
     id_col: str,
     text_col: str,
     *,
@@ -660,34 +665,50 @@ def _incremental_pairs(
     """The candidate + verify tail shared by `minhash_dedup_incremental`
     and `minhash_dedup_against_stored_index`: batch-vs-index one-sided
     join, within-batch self-join, semi-join-pruned exact-Jaccard
-    verify. `idx` is (_cid, band, band_hash)."""
+    verify. `index_df` is (id_col, band, band_hash), already capped.
+
+    Both candidate sets carry their `src` tag and meet ONE verify: the
+    dup_of side is the corpus candidates' shingles and the batch's own,
+    tagged alike, and the second join matches (dup_of, src): one
+    pipeline of two joins, not one per candidate set."""
+    idx = index_df.select(
+        F.col(id_col).alias("_cid"),
+        F.col("band").alias("_cband"),
+        F.col("band_hash").alias("_chash"),
+    )
     cross = (
-        new_banded.join(idx, ["band", "band_hash"])
-        # ids are expected disjoint between batch and corpus; the guard
-        # keeps a re-submitted doc from pairing with itself
-        .filter(F.col("_id") != F.col("_cid"))
-        .select(F.col("_id").alias("id_new"), F.col("_cid").alias("dup_of"))
+        new_banded.join(
+            idx,
+            (F.col("band") == F.col("_cband"))
+            & (F.col("band_hash") == F.col("_chash"))
+            # ids are expected disjoint between batch and corpus; the
+            # guard keeps a re-submitted doc from pairing with itself
+            & (F.col("_id") != F.col("_cid")),
+        )
+        .select(
+            F.col("_id").alias("id_new"),
+            F.col("_cid").alias("dup_of"),
+            F.lit("corpus").alias("src"),
+        )
         .distinct()
     )
-    within = (
-        _bucket_pairs(new_banded, ["band", "band_hash"], names=("dup_of", "id_new"))
-        .select("id_new", "dup_of")  # group as (id_new, dup_of), like `cross`
-        .distinct()
-    )
+    within = _bucket_pairs(
+        new_banded,
+        ["band", "band_hash"],
+        names=("dup_of", "id_new"),
+        extra=[F.lit("batch").alias("src")],
+    ).distinct()
     # Corpus text is touched ONLY for surfaced candidates (semi-join).
-    corpus_cand = corpus_df.join(
-        cross.select(F.col("dup_of").alias(id_col)).distinct(), id_col, "left_semi"
+    corpus_sh = _shingled_docs(
+        corpus_df.join(cross.select(F.col("dup_of").alias(id_col)), id_col, "left_semi"),
+        id_col, text_col, shingle_n,
     )
-    corpus_sh = _shingled_docs(corpus_cand, id_col, text_col, shingle_n)
-
-    def _verify(cand: DataFrame, dup_sh: DataFrame, src: str) -> DataFrame:
-        return _jaccard_verify(
-            cand, new_docs, dup_sh, names=("id_new", "dup_of"),
-            threshold=threshold, round_to=round_to,
-        ).withColumn("src", F.lit(src))
-
-    return _verify(cross, corpus_sh, "corpus").unionByName(
-        _verify(within, new_docs, "batch")
+    dup_sh = corpus_sh.select("*", F.lit("corpus").alias("src")).unionByName(
+        new_docs.select("*", F.lit("batch").alias("src"))
+    )
+    return _jaccard_verify(
+        cross.unionByName(within), new_docs, dup_sh, names=("id_new", "dup_of"),
+        on=["src"], threshold=threshold, round_to=round_to,
     )
 
 
@@ -802,11 +823,9 @@ def minhash_dedup_against_stored_index(
                 for b, vs in sorted(by_band.items())
             ],
         )
-    idx = capped_band_index(idx_raw, max_bucket).select(
-        F.col(id_col).alias("_cid"), "band", "band_hash"
-    )
     return _incremental_pairs(
-        corpus_df, new_docs, new_banded, idx, id_col, text_col,
+        corpus_df, new_docs, new_banded, capped_band_index(idx_raw, max_bucket),
+        id_col, text_col,
         shingle_n=shingle_n, threshold=threshold, round_to=round_to,
     )
 
@@ -883,8 +902,12 @@ def ngram_jaccard_pairs(
       MinHash path above. Deterministic, so a SQL oracle can replay
       it (HAVING COUNT(*) <= cap on the inverted index).
 
-    Plan notes: the shingling expression feeds three branches (sizes +
-    both join sides) — persisted once so codegen runs it once, not 3×.
+    Plan notes: each inverted-index row carries its doc's shingle
+    count, so the self-join yields both union sizes and the score is
+    one projection over the counted pairs, with no join back to a
+    size table. The shingled docs are persisted and filtered above the
+    persist, which keeps the shingle expression out of the explode's
+    inferred filter below the rebalance exchange (see _shingled_docs).
     The join key is xxhash64(shingle), an 8-byte long instead of the
     shingle string: a smaller shuffle and a cheaper hash-join probe.
     Collisions would need two distinct corpus shingles with equal
@@ -900,33 +923,30 @@ def ngram_jaccard_pairs(
             F.array_distinct(T.shingles(F.col(text_col), shingle_n)).alias("_sh"),
         )
     ).filter(F.size("_sh") > 0)
-    sizes = docs.select("_id", F.size("_sh").alias("_n"))
-    inv = docs.select("_id", F.explode("_sh").alias("shingle")).select(
-        "_id", F.xxhash64("shingle").alias("shingle")
+    inv = docs.select("_id", F.size("_sh").alias("_n"), F.explode("_sh").alias("shingle")).select(
+        "_id", "_n", F.xxhash64("shingle").alias("shingle")
     )
     # Document-frequency prune (see docstring). One row per (_id,
     # shingle) — per-doc shingles are distinct — so the bucket size
     # IS the document frequency.
-    # Persist the pruned index (16 bytes/row: id + hashed shingle) so
-    # the explode + window-prune pass runs once, not per self-join
-    # branch — and both branches inherit the window's (shingle)
-    # partitioning from the cache, so the join adds no exchange.
+    # Persist the pruned index (20 bytes/row: id + shingle count +
+    # hashed shingle) so the explode + window-prune pass runs once, not
+    # per self-join branch — and both branches inherit the window's
+    # (shingle) partitioning from the cache, so the join adds no
+    # exchange.
     inv = track_persist(_cap_buckets(inv, ["shingle"], max_doc_freq, min_size=2))
     common = (
-        _bucket_pairs(inv, ["shingle"])
-        .groupBy("id_a", "id_b")
+        _bucket_pairs(
+            inv, ["shingle"], extra=[F.col("l._n").alias("n_a"), F.col("r._n").alias("n_b")]
+        )
+        .groupBy("id_a", "id_b", "n_a", "n_b")
         .agg(F.count("*").alias("n_common"))
     )
-    return (
-        common.join(sizes.withColumnRenamed("_id", "id_a").withColumnRenamed("_n", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("_id", "id_b").withColumnRenamed("_n", "n_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    jaccard = F.col("n_common").cast("double") / (
+        F.col("n_a") + F.col("n_b") - F.col("n_common")
+    ).cast("double")
+    return common.select("id_a", "id_b", jaccard.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
     )
 
 

@@ -800,7 +800,7 @@ _BM25_INC_SOURCE = """(
     oracle=_bm25_oracle(source=_BM25_INC_SOURCE),
 )
 def doc_bm25_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTALLY MAINTAINED lexical index (round 8): the corpus
+    """INCREMENTALLY MAINTAINED lexical index: the corpus
     lives in a TxTable and mutates — an initial subset, then one merge
     that INSERTS the held-out docs and UPDATES every doc_id%5==1 text
     (appending ' spark merge', deliberately shifting df/tf for the
@@ -1384,7 +1384,7 @@ def doc_minhash_incremental_stored(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """`doc_minhash_incremental` answered from a STORED band index
-    under a bucket-footprint-pruned scan (round 9): the corpus's
+    under a bucket-footprint-pruned scan: the corpus's
     UNCAPPED band rows live in a TxTable clustered on
     (band, band_hash); the batch's distinct band keys become a DNF
     predicate the manifest stats evaluate before Spark plans the scan
@@ -1484,10 +1484,9 @@ ORDER BY id_a, id_b
 """,
 )
 def doc_minhash_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTALLY MAINTAINED LSH band index (round 9) — the dedup
-    leg of the maintained-artifact family, completing the trilogy into
-    a quartet (join views, BM25 postings, IVF cells, and now the
-    MinHash band index). The corpus lives in a TxTable and mutates —
+    """INCREMENTALLY MAINTAINED LSH band index — the dedup
+    leg of the maintained-artifact family (join views, BM25 postings,
+    IVF cells and the MinHash band index). The corpus lives in a TxTable and mutates —
     an initial subset (doc_id % 3 != 0), then one merge that INSERTS
     the held-out docs and UPDATES every doc_id % 7 == 1 text
     (appending ' lsh shift', deliberately changing shingles and

@@ -9,10 +9,15 @@ surprise shuffle) fails here — this is the 100 TB contract.
 
 from __future__ import annotations
 
+import collections
+import functools
+import inspect
 import io
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.group import GroupedData
 
 from filesystemagent_spark.queries import registry
 from filesystemagent_spark.sources.layout import compact, read_partitioned, write_partitioned
@@ -584,3 +589,54 @@ def test_lsh_verify_runs_arrow_kernel_once_below_hash_exchange(spark, sf_dir):
     dot = next(i for i, l in enumerate(lines) if "ArrowEvalPython [pair_dot(" in l)
     assert hsh < dot, plan
     assert not any("QueryStage" in ops[i] for i in range(hsh + 1, dot)), plan
+
+
+def _plan_steps(spark, sf_dir, name):
+    """Counter of the top-level DataFrame and GroupedData method calls
+    (select, join, persist, ...) made while `name`'s plan is built, on
+    a warm second build. Each call analyzes the plan built so far, so
+    the count measures the build's planning work in plan steps,
+    independent of timing."""
+    from filesystemagent_spark.caching import tracked_scope
+
+    counts = collections.Counter()
+    depth = [0]
+
+    def wrap(attr, fn):
+        @functools.wraps(fn)
+        def counted(*args, **kwargs):
+            if depth[0] == 0:
+                counts[attr] += 1
+            depth[0] += 1
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                depth[0] -= 1
+
+        return counted
+
+    classes = (type(spark.range(1)), GroupedData)
+    with pytest.MonkeyPatch.context() as mp:
+        for cls in classes:
+            for attr, fn in list(vars(cls).items()):
+                if not attr.startswith("_") and inspect.isfunction(fn):
+                    mp.setattr(cls, attr, wrap(attr, fn))
+        for _ in range(2):  # the second, warm build is the one counted
+            counts.clear()
+            with tracked_scope():
+                QUERIES[name].fn(spark, sf_dir)
+                built = collections.Counter(counts)  # before the release
+    return built
+
+
+def test_shingle_dedup_plans_build_in_few_steps(spark, sf_dir):
+    """The MinHash-incremental and n-gram-Jaccard plans are built in
+    wide projections: 64 and 28 plan steps (5 and 2 persists) when each
+    withColumn, rename, drop and explode-then-select was its own step,
+    at most 51 and 22 since. The persists stay: each is read by more
+    than one branch or fences the shingle kernel off a pushed-down
+    filter (see operators/dedup._shingled_docs)."""
+    mh = _plan_steps(spark, sf_dir, "doc_minhash_incremental")
+    assert sum(mh.values()) <= 51 and mh["persist"] <= 5, mh
+    ng = _plan_steps(spark, sf_dir, "doc_near_dup_jaccard_pruned")
+    assert sum(ng.values()) <= 22 and ng["persist"] <= 2, ng

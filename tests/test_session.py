@@ -37,6 +37,20 @@ def test_codegen_cache_holds_repeated_queries(spark, sf_dir):
             release_tracked_caches()
 
     run_all()  # warm: compiles every class these plans need
-    before = compiled_class_count(spark)
-    run_all()
+    # Two plan details are decided at run time, by which AQE query
+    # stage finishes first, and both reach the generated code:
+    # - the whole-stage-codegen stage ids, which are part of each
+    #   generated class (doc_minhash_incremental numbers the same
+    #   subplan *(6) in one run and *(7) in another);
+    # - the build side of a self-join over one cached frame, whose two
+    #   sides are equal in size (embedding_near_dup_lsh broadcasts its
+    #   left bucket side in one run and its right in another).
+    # So a repeat round can meet a variant for the first time. Repeat
+    # until a round compiles nothing, at most 3 times; a cache smaller
+    # than the working set recompiles in every round and still fails.
+    for _ in range(3):
+        before = compiled_class_count(spark)
+        run_all()
+        if compiled_class_count(spark) == before:
+            break
     assert compiled_class_count(spark) - before == 0
